@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Round-record benchmark: every `SparkEntry.queries` entry timed at the
   * driver's scale factor, one JSON headline line on stdout.
@@ -23,16 +22,13 @@ import org.apache.spark.sql.SparkSession
   * one query's whole back-to-back sample set defeats min-of-samples,
   * because every sample lands inside the window. With shuffled passes the
   * same wall-clock window hits DIFFERENT queries in different passes, so
-  * the cross-pass min rejects it structurally (the SteadyProbe A/B
+  * the cross-pass min rejects it structurally (interleaved A/B
   * discipline applied to the run of record). Exoneration tables were
   * written three rounds running; this makes them unnecessary.
   *
-  * codegen.cache.maxEntries is raised from its 100 default: with the
-  * full suite (141 queries and growing) visited once per pass, the
-  * generated-class cache would otherwise evict
-  * between a query's warmup and its steady samples, putting codegen
-  * compile time back INTO the steady samples that warmup exists to
-  * amortize (the cache is keyed by generated source, so re-visits hit).
+  * The session conf is `Sessions.builder`'s; its raised
+  * codegen.cache.maxEntries is what keeps codegen compile time out of
+  * the steady passes.
   */
 object Bench {
 
@@ -73,35 +69,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     // box yardstick BEFORE the JVM is busy: min of three trials (JIT
     // warms on the first), re-measured at the end to catch drift
     val calibStart = Seq.fill(3)(calibrateMs()).min
-    val calibParStart = calibrateParMs(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark-docs-recommended AQE behavior: respect the advisory size
-      // when coalescing post-shuffle partitions instead of pinning to
-      // parallelism - tiny shuffles collapse to few tasks (local bench),
-      // big shuffles still fan out (cluster scale)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // 8m advisory: KB-shuffles still collapse to one task, but a
-      // mid-size (tens of MB) shuffle keeps enough partitions to use the
-      // cores instead of serializing on a single reducer
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      // round 21: let AQE apply inside CACHED plan compilation too
-      // (default false) — without it every .cache() materializes its
-      // subplan at the full static shuffle width (tiny cached partitions
-      // locally, and at cluster scale a cached frame whose width ignores
-      // its actual bytes), and the two AQE knobs above never reach the
-      // suite's cache-heavy kernels (q108/q165/q94's iteration caches)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // static conf — see methodology note above
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val calibParStart = calibrateParMs(cpus)
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // local-iteration filter (same contract as Verify); driver leaves unset
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSeq)
@@ -182,7 +155,7 @@ object Bench {
         } => "\"" + shortKey(k) + "\""
       }.mkString("[", ",", "]")
       val calibEnd = Seq.fill(3)(calibrateMs()).min
-      val calibParEnd = calibrateParMs(cpus.toInt)
+      val calibParEnd = calibrateParMs(cpus)
       // cross-run regression gates, CALIB-NORMALIZED (judge r15 #2 —
       // the yardstick is now CONSUMED, not just recorded): when
       // SPARK_GRAFT_BENCH_BASELINE names a previous run's headline

@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark-docs-recommended AQE behavior: respect the advisory size
-      // when coalescing post-shuffle partitions instead of pinning to
-      // parallelism - tiny shuffles collapse to few tasks (local bench),
-      // big shuffles still fan out (cluster scale)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // 8m advisory: KB-shuffles still collapse to one task, but a
-      // mid-size (tens of MB) shuffle keeps enough partitions to use the
-      // cores instead of serializing on a single reducer
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      // round 21: AQE inside cached-plan compilation (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: GRAFT_ONLY=q27,q53 runs the matching subset

@@ -89,28 +89,31 @@ object Analytics {
     val wz = Window.partitionBy($"z")
       .orderBy($"l_orderkey", $"l_linenumber", $"x", $"l_suppkey")
     val ranked = li.withColumn("rz", row_number().over(wz))
-    // z histogram: ≤ 2¹⁶ (z, count) rows however large the table —
-    // prefix-summed on the driver, broadcast back as (z, cum-before)
-    val hist = li.groupBy($"z").agg(count(lit(1)).as("c"))
-      .orderBy($"z").collect()
-    val n = hist.iterator.map(_.getLong(1)).sum
-    var running = 0L
-    val offsets = hist.toSeq.map { r =>
-      val o = (r.getInt(0), running); running += r.getLong(1); o
-    }.toDF("z", "cum")
-    val report = ranked.join(broadcast(offsets), Seq("z"))
-      .withColumn("file_id",
-        expr(s"cast(((cum + rz - 1) * 16) div ${math.max(n, 1L)} as int) + 1"))
-      .groupBy($"file_id")
-      .agg(count(lit(1)).as("n_rows"),
-        min($"x").as("min_x"), max($"x").as("max_x"),
-        min($"y").as("min_y"), max($"y").as("max_y"))
-      .withColumn("envelope_area",
-        (($"max_x" - $"min_x" + 1) * ($"max_y" - $"min_y" + 1)).cast("long"))
-      .orderBy($"file_id")
-    val rows = report.collect() // bounded: 16 file rows
-    li.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), report.schema)
+    // both collects below run jobs over the cache: release it on every
+    // exit, a failed job included
+    try {
+      // z histogram: ≤ 2¹⁶ (z, count) rows however large the table —
+      // prefix-summed on the driver, broadcast back as (z, cum-before)
+      val hist = li.groupBy($"z").agg(count(lit(1)).as("c"))
+        .orderBy($"z").collect()
+      val n = hist.iterator.map(_.getLong(1)).sum
+      var running = 0L
+      val offsets = hist.toSeq.map { r =>
+        val o = (r.getInt(0), running); running += r.getLong(1); o
+      }.toDF("z", "cum")
+      val report = ranked.join(broadcast(offsets), Seq("z"))
+        .withColumn("file_id",
+          expr(s"cast(((cum + rz - 1) * 16) div ${math.max(n, 1L)} as int) + 1"))
+        .groupBy($"file_id")
+        .agg(count(lit(1)).as("n_rows"),
+          min($"x").as("min_x"), max($"x").as("max_x"),
+          min($"y").as("min_y"), max($"y").as("max_y"))
+        .withColumn("envelope_area",
+          (($"max_x" - $"min_x" + 1) * ($"max_y" - $"min_y" + 1)).cast("long"))
+        .orderBy($"file_id")
+      val rows = report.collect() // bounded: 16 file rows
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), report.schema)
+    } finally li.unpersist()
   }
 
   val q87Oracle: String = {

@@ -177,8 +177,8 @@ object Dedup {
     // single small fixture file would otherwise run the whole map side in
     // one task (fanoutParallelism sizes the map fan-out to the input and
     // saturates the cluster on a real table).
-    // Round 22 (guide §2.3/§2.4, R22PairBench decomposition — the same
-    // three findings as q109's kernel):
+    // Round 22 (guide §2.3/§2.4, per-step decomposition of the pair
+    // kernel — the same three findings as q109's kernel):
     //  (a) the shingle stream is shuffled RAW by sh64 via an explicit
     //      REPARTITION_BY_NUM exchange instead of feeding a map-side
     //      partial collect_set: intra-doc duplicate shingles are ~0 in
@@ -1238,11 +1238,15 @@ object Dedup {
     *
     * Stop-bucket cap (the q28 discipline, and on THIS fixture a real
     * one: the synthetic docs share one bag-of-words mode, so one band
-    * value holds 65% of the corpus): buckets over [[SimhashBucketCap]]
-    * docs are dropped from candidate generation via a broadcast
-    * anti-join on the tiny hot-bucket list (NOT a full-table window —
-    * the fenced q28 lesson), making the cap part of the operator's
-    * semantics, mirrored in the oracle. Production uses a 64-bit
+    * value holds 65% of the corpus): each (band, value) bucket is
+    * grouped into one `collect_list` of its (doc_id, simhash) structs,
+    * and buckets with `size(ds) > [[SimhashBucketCap]]` are dropped
+    * before the pair expansion, making the cap part of the operator's
+    * semantics, mirrored in the oracle. Memory caveat: the cap filters
+    * AFTER the collect, so a hot bucket's whole member list is still
+    * built in one task's memory — 65% of the corpus on this fixture,
+    * unbounded at scale; the cap bounds the pair fan-out, not the
+    * grouped row. Production uses a 64-bit
     * simhash with 16-bit bands (65 536 values/band) where buckets stay
     * sparse on a deduplicated web corpus; the cap is the guard for the
     * adversarial/degenerate tail either way. */

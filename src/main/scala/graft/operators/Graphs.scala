@@ -262,8 +262,8 @@ object Graphs {
 
   def q109CooccurrenceGraph(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Round 22 (guide §2.3/§2.4, measured 1.55 → 0.85–1.15 s in the
-    // R22PairBench decomposition):
+    // Round 22 (guide §2.3/§2.4, measured 1.55 → 0.85–1.15 s in a
+    // per-step decomposition of the pair kernel):
     //  (a) the raw (partkey, suppkey) stream is shuffled ONCE by
     //      partkey instead of feeding a map-side partial collect_set:
     //      a pair's ~7 global copies are spread across ALL map tasks,

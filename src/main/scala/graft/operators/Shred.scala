@@ -82,9 +82,25 @@ object Shred {
 
   /** Parse a DataFrame with a `json` string column into the typed document
     * shape. Malformed documents yield null structs (PERMISSIVE) — the
-    * per-item fault isolation of `epa_ingestion.py:426-427`. */
-  def parse(docs: DataFrame, jsonCol: String = "json"): DataFrame =
-    docs.withColumn("doc", from_json(col(jsonCol), productSchema))
+    * per-item fault isolation of `epa_ingestion.py:426-427`.
+    *
+    * A bare PERMISSIVE `from_json` keeps the fields it read before the
+    * fault: a line cut right after a key inside a nested array still
+    * yields its `eparegno` and `productname`, i.e. a keyed half-product.
+    * So a second parse whose only field is the corrupt record flags every
+    * line that is not well-formed JSON, and a flagged line's `doc` is
+    * null; `doc` keeps exactly `productSchema`. Flagging inside the
+    * document parse instead would need the helper field dropped from
+    * `doc` again, and rebuilding that 19-field struct costs more per
+    * batch than the second tokenization of each line. */
+  def parse(docs: DataFrame, jsonCol: String = "json"): DataFrame = {
+    val corrupt = from_json(col(jsonCol),
+      StructType(Seq(StructField("_corrupt_record", StringType))),
+      Map("columnNameOfCorruptRecord" -> "_corrupt_record"))
+      .getField("_corrupt_record")
+    docs.withColumn("doc",
+      when(corrupt.isNull, from_json(col(jsonCol), productSchema)))
+  }
 
   /** Shred parsed documents into the parent table + nine child tables,
     * keyed by table name (parent = "products"). Child rows carry the

@@ -39,14 +39,7 @@ object DedupFuzz {
     val outDir = args(1)
     val n = args.lift(2).map(_.toInt).getOrElse(102)
     val seed = args.lift(3).map(_.toLong).getOrElse(13L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rng = new java.util.Random(seed)
     new java.io.File(outDir).mkdirs()

@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Boots a session THROUGH spark.sql.extensions=graft.GraftExtensions (the
   * cluster deploy path) and exercises every injected piece — functions,
   * generator, and the optimizer rule — from pure SQL. */
 object ExtensionsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.Sessions.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("=== injected scalar + generator functions ===")

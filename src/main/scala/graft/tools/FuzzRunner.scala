@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.Tables
 
 import java.nio.file.{Files, Paths}
@@ -17,14 +16,7 @@ import java.nio.file.{Files, Paths}
 object FuzzRunner {
   def main(args: Array[String]): Unit = {
     val Array(queriesFile, sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach(n =>
       Tables.load(spark, sfDir, n).createOrReplaceTempView(n))

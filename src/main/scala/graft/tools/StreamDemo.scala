@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.EventsStream
 import graft.sources.BinaryStore
 
@@ -8,10 +7,7 @@ import graft.sources.BinaryStore
   * the local verification recipe; not part of the engine API). */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val q = EventsStream.runAvailableNow(

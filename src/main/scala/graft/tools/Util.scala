@@ -25,7 +25,7 @@ object JsonText {
 object Jvm {
   /** Cumulative GC milliseconds across all collectors; a collector
     * reporting -1 (undefined) counts as 0 rather than skewing the sum
-    * negative (review find — WidthProbe's fork dropped the clamp). */
+    * negative (a per-probe copy of this sum once dropped the clamp). */
   def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

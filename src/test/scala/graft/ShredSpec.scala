@@ -70,6 +70,22 @@ class ShredSpec extends SparkSuite {
     assert(tables("sites").count() == 2)
   }
 
+  test("a line cut inside a nested array yields no keyed partial product") {
+    // cut right after a key inside pdffiles: the fields read before the
+    // fault must not survive as a second products/companyinfo/pdffiles row
+    val cut = fullDoc.take(fullDoc.indexOf("\"pdffile\":") + "\"pdffile\"".length)
+    val tables = Shred.shredJson(spark, Seq(fullDoc, cut))
+    val keys = tables("products").collect()
+      .map(r => Option(r.getAs[String]("EPAREGNO")))
+    assert(keys.toSeq.sorted == Seq(None, Some("70051-119")))
+    assert(tables("companyinfo").count() == 1)
+    assert(tables("pdffiles").count() == 2)
+    // flagging adds no field: `doc` keeps exactly the declared schema
+    import spark.implicits._
+    assert(Shred.parse(Seq(cut).toDF("json")).schema("doc").dataType ==
+      Shred.productSchema)
+  }
+
   test("variant (schema-on-read) path matches the declared-schema path") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
