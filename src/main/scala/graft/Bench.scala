@@ -74,7 +74,7 @@ object Bench {
     // warms on the first), re-measured at the end to catch drift
     val calibStart = Seq.fill(3)(calibrateMs()).min
     val calibParStart = calibrateParMs(cpus)
-    val spark = Sessions.builder(cpus).getOrCreate()
+    val spark = Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // local-iteration filter (same contract as Verify); driver leaves unset
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSeq)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one way the engine's mains build a session: Bench, Verify and
-  * every tool under `graft.tools` call `Sessions.builder(...).getOrCreate()`,
+  * every tool under `graft.tools` call `Sessions.builder.getOrCreate()`,
   * so the run of record, the correctness dump and the diagnostics all
   * execute queries under the same conf. */
 object Sessions {
@@ -12,7 +12,8 @@ object Sessions {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def builder(cpus: Int = Sessions.cpus): SparkSession.Builder =
+  def builder: SparkSession.Builder = {
+    val cpus = Sessions.cpus
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -42,4 +43,5 @@ object Sessions {
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+  }
 }

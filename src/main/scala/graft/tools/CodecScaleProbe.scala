@@ -39,7 +39,7 @@ object CodecScaleProbe {
       "crossdup")(lane),
       s"unknown lane $lane")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -39,7 +39,7 @@ object DedupFuzz {
     val outDir = args(1)
     val n = args.lift(2).map(_.toInt).getOrElse(102)
     val seed = args.lift(3).map(_.toLong).getOrElse(13L)
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rng = new java.util.Random(seed)
     new java.io.File(outDir).mkdirs()

@@ -5,7 +5,7 @@ package graft.tools
   * generator, and the optimizer rule — from pure SQL. */
 object ExtensionsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.builder()
+    val spark = graft.Sessions.builder
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

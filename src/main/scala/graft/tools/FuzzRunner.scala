@@ -16,7 +16,7 @@ import java.nio.file.{Files, Paths}
 object FuzzRunner {
   def main(args: Array[String]): Unit = {
     val Array(queriesFile, sfDir, outDir) = args
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach(n =>
       Tables.load(spark, sfDir, n).createOrReplaceTempView(n))

@@ -128,7 +128,7 @@ object JoinAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

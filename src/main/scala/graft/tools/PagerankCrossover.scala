@@ -32,7 +32,7 @@ object PagerankCrossover {
     val iters = args.headOption.map(_.toInt).getOrElse(15)
     val replicas = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

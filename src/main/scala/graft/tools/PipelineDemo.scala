@@ -7,7 +7,7 @@ import graft.operators.{Pipeline, Shred}
   * (local verification recipe; mirrors SURVEY.md §3.1). */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

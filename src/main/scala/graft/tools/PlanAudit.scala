@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.window.WindowExec
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -34,7 +34,7 @@ object Probe {
       "usage: Probe plans|stages <query-prefix,...> [sfDir]")
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
     val names = select(args(1).split(",").toSeq)
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try names.foreach { name =>
       val build = () => graft.SparkEntry.queries(name)(spark, sfDir)
@@ -54,11 +54,16 @@ object Probe {
     }.distinct
   }
 
+  /** Builds the query, runs `act` on it and returns the wall time of
+    * those two in ms; the cache release that follows is not timed. */
   private def run(spark: SparkSession, build: () => DataFrame)(
-      act: DataFrame => Unit): Unit = {
+      act: DataFrame => Unit): Long = {
+    val t0 = System.nanoTime()
     ConfGuard.withConfSnapshot(spark)(act(build()))
+    val ms = (System.nanoTime() - t0) / 1000000
     spark.catalog.clearCache()
     Checkpoints.sweep(spark)
+    ms
   }
 
   private def plan(spark: SparkSession, name: String,
@@ -87,9 +92,7 @@ object Probe {
     }
     sc.addSparkListener(listener)
     val startMs = System.currentTimeMillis()
-    val t0 = System.nanoTime()
-    run(spark, build)(noop)
-    val wallMs = (System.nanoTime() - t0) / 1000000
+    val wallMs = run(spark, build)(noop)
     // stage events reach listeners asynchronously and in order: once a
     // marker job's stage arrives, every measured stage has arrived too
     sc.setCallSite("probe-drain")

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val r = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -7,7 +7,7 @@ import graft.sources.BinaryStore
   * the local verification recipe; not part of the engine API). */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.builder().getOrCreate()
+    val spark = graft.Sessions.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val q = EventsStream.runAvailableNow(

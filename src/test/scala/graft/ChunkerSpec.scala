@@ -77,6 +77,115 @@ class ChunkerSpec extends AnyFunSuite {
     val t = ("lorem ipsum dolor sit amet " * 200).trim
     assert(Chunker.chunkText(t) == Chunker.chunkText(t))
   }
+
+  test("offset splitter equals the reference splitter on seeded mixed-separator texts") {
+    // separators are chosen per join, so a "\n\n" region mixes "\n" and
+    // " " inside it (the multi-level recursion), and words up to 200
+    // chars fall through to the character split at small chunk sizes
+    val rnd = new scala.util.Random(7)
+    val seps = Array(" ", " ", " ", "\n", "\n", "\n\n")
+    for (n <- 1 to 500) {
+      val sb = new StringBuilder
+      for (w <- 0 until rnd.nextInt(300)) {
+        if (w > 0) sb.append(seps(rnd.nextInt(seps.length)))
+        sb.append(rnd.alphanumeric.take(1 + rnd.nextInt(200)).mkString)
+      }
+      val t = sb.toString
+      val cs = 50 + rnd.nextInt(400)
+      val ov = rnd.nextInt(cs / 2)
+      val (got, want) = (Chunker.chunkText(t, cs, ov), ChunkerRef.chunkText(t, cs, ov))
+      if (got != want) {
+        val k = got.zipAll(want, "", "").indexWhere { case (g, w) => g != w }
+        fail(s"text $n (chunkSize $cs, overlap $ov, length ${t.length}): " +
+          s"${got.size} vs ${want.size} chunks, first difference at chunk $k")
+      }
+    }
+  }
+}
+
+/** The original piece-String recursive splitter, kept as the reference the
+  * offset-based [[Chunker.chunkText]] must match chunk for chunk. */
+private object ChunkerRef {
+  import scala.collection.mutable.ArrayBuffer
+
+  def chunkText(text: String, chunkSize: Int, overlap: Int): Seq[String] =
+    if (text == null || text.isEmpty) Seq.empty
+    else splitRecursive(text, chunkSize, overlap, Seq("\n\n", "\n", " ", ""))
+
+  private def splitRecursive(text: String, chunkSize: Int, overlap: Int,
+      separators: Seq[String]): Seq[String] = {
+    var separator = separators.lastOption.getOrElse("")
+    var newSeparators: Seq[String] = Seq.empty
+    var i = 0
+    var found = false
+    while (i < separators.length && !found) {
+      val s = separators(i)
+      if (s.isEmpty) { separator = s; found = true }
+      else if (text.contains(s)) {
+        separator = s; newSeparators = separators.drop(i + 1); found = true
+      }
+      i += 1
+    }
+    val splits =
+      if (separator.isEmpty) text.map(_.toString)
+      else {
+        val parts = ArrayBuffer.empty[String]
+        var from = 0
+        var idx = text.indexOf(separator)
+        var first = true
+        while (idx >= 0) {
+          parts += (if (first) text.substring(from, idx)
+            else separator + text.substring(from, idx))
+          first = false
+          from = idx + separator.length
+          idx = text.indexOf(separator, from)
+        }
+        parts += (if (first) text.substring(from) else separator + text.substring(from))
+        parts.filter(_.nonEmpty).toSeq
+      }
+    val finalChunks = ArrayBuffer.empty[String]
+    val goodSplits = ArrayBuffer.empty[String]
+    for (s <- splits) {
+      if (s.length < chunkSize) goodSplits += s
+      else {
+        if (goodSplits.nonEmpty) {
+          finalChunks ++= mergeSplits(goodSplits.toSeq, chunkSize, overlap)
+          goodSplits.clear()
+        }
+        if (newSeparators.isEmpty) finalChunks += s
+        else finalChunks ++= splitRecursive(s, chunkSize, overlap, newSeparators)
+      }
+    }
+    if (goodSplits.nonEmpty)
+      finalChunks ++= mergeSplits(goodSplits.toSeq, chunkSize, overlap)
+    finalChunks.toSeq
+  }
+
+  /** Pieces already carry their separators, so they join with "". */
+  private def mergeSplits(splits: Seq[String], chunkSize: Int,
+      overlap: Int): Seq[String] = {
+    val docs = ArrayBuffer.empty[String]
+    var current = ArrayBuffer.empty[String]
+    var total = 0
+    def joinDocs(ds: Seq[String]): Option[String] = {
+      val t = ds.mkString.strip()
+      if (t.isEmpty) None else Some(t)
+    }
+    for (d <- splits) {
+      val len = d.length
+      if (total + len > chunkSize && current.nonEmpty) {
+        joinDocs(current.toSeq).foreach(docs += _)
+        while (total > overlap || (total + len > chunkSize && total > 0)) {
+          total -= current.head.length
+          current = current.drop(1)
+        }
+      }
+      current += d
+      total += len
+    }
+    joinDocs(current.toSeq).foreach(docs += _)
+    docs.toSeq
+  }
 }
 
 /** Generator (native UDTF) path ≡ UDF+posexplode path, and the plan
