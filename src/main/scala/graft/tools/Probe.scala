@@ -14,8 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A prefix selects the queries whose name starts with it and does not
   * continue with a digit (`q28` → `q28_dedup_minhash_lsh`, not `q280`).
   *
-  *  - `plans` prints each query's executed physical plan (the evidence
-  *    behind PLANS.md and SCALE.md).
+  *  - `plans` runs each query once and prints its executed physical
+  *    plan (the evidence behind PLANS.md and SCALE.md). Under AQE that
+  *    is the final plan: reused stages show as `ReusedExchange`, which
+  *    the static view printed before a run does not have.
   *  - `stages` runs each query once to warm codegen and the JIT, then
   *    once measured. Both passes materialize every row and column through
   *    a `noop` write: `.count()` lets Catalyst prune projected work,
@@ -68,6 +70,7 @@ object Probe {
 
   private def plan(spark: SparkSession, name: String,
       build: () => DataFrame): Unit = run(spark, build) { df =>
+    df.queryExecution.toRdd.foreach(_ => ())
     println(s"===== $name =====")
     println(df.queryExecution.executedPlan)
   }
