@@ -170,6 +170,9 @@ object Bench {
       // rounds later (judge r16 item 7). When the configured baseline
       // is degraded vs history, the gate runs against the best-box
       // history line INSTEAD, and `base_slow` surfaces the switch.
+      // Both lines carry `cpus` (the local width): a baseline of another
+      // width is not comparable, so the gate is skipped with a printed
+      // line, and only same-width history lines can replace a slow one.
       val historyPath = java.nio.file.Paths.get("bench_history.jsonl")
       val history =
         try {
@@ -183,26 +186,26 @@ object Bench {
           catch { case _: Throwable => None }
         }
         .map { bl0 =>
-          val slow = graft.tools.BenchGates.baselineDegraded(bl0, history)
-          val bl =
-            if (slow)
-              graft.tools.BenchGates.bestBaseline(bl0 +: history)
-                .getOrElse(bl0)
-            else bl0
-          def short(m: Map[String, Double]): Map[String, Double] =
-            m.groupMapReduce { case (k, _) => shortKey(k) }(_._2)(math.min)
-          val (n, r) = graft.tools.BenchGates.regressions(
-            short(results.toMap),
-            Some(math.min(calibStart, calibEnd)),
-            short(graft.tools.BenchGates.parseQueries(bl)),
-            graft.tools.BenchGates.parseCalib(bl),
-            Some(math.min(calibParStart, calibParEnd)),
-            graft.tools.BenchGates.parseCalibPar(bl))
-          (n, r, slow)
+          graft.tools.BenchGates.baselineFor(bl0, history, cpus) match {
+            case Left(skipped) =>
+              println(s"[bench] $skipped")
+              (Nil, Nil, false)
+            case Right((bl, slow)) =>
+              def short(m: Map[String, Double]): Map[String, Double] =
+                m.groupMapReduce { case (k, _) => shortKey(k) }(_._2)(math.min)
+              val (n, r) = graft.tools.BenchGates.regressions(
+                short(results.toMap),
+                Some(math.min(calibStart, calibEnd)),
+                short(graft.tools.BenchGates.parseQueries(bl)),
+                graft.tools.BenchGates.parseCalib(bl),
+                Some(math.min(calibParStart, calibParEnd)),
+                graft.tools.BenchGates.parseCalibPar(bl))
+              (n, r, slow)
+          }
         }.getOrElse((Nil, Nil, false))
       def jarr(xs: Seq[String]): String =
         xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val headline = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib_ms":[$calibStart,$calibEnd],"calib_par_ms":[$calibParStart,$calibParEnd],"queries":$qs,"deg":$deg,"noisy":$noisy,"failed":$fl,"reg":${jarr(reg)},"reg_raw":${jarr(regRaw)},"base_slow":$baseSlow,"sf":"$sfDir"}"""
+      val headline = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib_ms":[$calibStart,$calibEnd],"calib_par_ms":[$calibParStart,$calibParEnd],"queries":$qs,"deg":$deg,"noisy":$noisy,"failed":$fl,"reg":${jarr(reg)},"reg_raw":${jarr(regRaw)},"base_slow":$baseSlow,"cpus":$cpus,"sf":"$sfDir"}"""
       println(headline)
       // append FULL runs to the sealed-headline history (GRAFT_ONLY
       // iteration runs would pollute it with partial query sets),
@@ -225,7 +228,7 @@ object Bench {
         try java.nio.file.Files.writeString(
           java.nio.file.Paths.get("bench_headline.json"), headline)
         catch { case _: Throwable => () }
-      println(s"""{"metric":"total_compact","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"calib_ms":[$calibStart,$calibEnd],"calib_par_ms":[$calibParStart,$calibParEnd],"deg":$deg,"noisy":$noisy,"failed":$fl,"reg":${jarr(reg)},"reg_raw":${jarr(regRaw)},"base_slow":$baseSlow,"sf":"$sfDir"}""")
+      println(s"""{"metric":"total_compact","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"calib_ms":[$calibStart,$calibEnd],"calib_par_ms":[$calibParStart,$calibParEnd],"deg":$deg,"noisy":$noisy,"failed":$fl,"reg":${jarr(reg)},"reg_raw":${jarr(regRaw)},"base_slow":$baseSlow,"cpus":$cpus,"sf":"$sfDir"}""")
       Console.out.flush()
       // full raw-sample dump (small, one line per query) — the audit
       // trail the one-line headline can't carry; the round-end snapshot

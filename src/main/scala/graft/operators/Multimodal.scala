@@ -15,12 +15,26 @@ import graft.sources.Tables
   * libraries), injected as a function so a real decoder drops in without
   * touching the plan shape.
   *
-  * Scale notes: decode runs inside mapPartitions-style UDF batches — one
-  * JVM call per row, no driver round-trip, no shuffle; frame sampling is
-  * a Generate (explode) that fans out inside the task. Media bytes never
-  * shuffle: every op here is scan→project→generate.
+  * Scale notes: every decode lane sorts its ids first and decodes once
+  * after the exchange ([[sortedIds]]). A global sort's RangePartitioner
+  * samples its child by computing the whole child, so a decoder projected
+  * BELOW the sort ran twice per row — once for the sampling job, once in
+  * the map stage. Sorting the narrow id frame and projecting the decoder
+  * above it leaves the sampler reading ids only; the decoder runs once
+  * per row, one JVM call, no driver round-trip. Project and Generate
+  * (frame, page and per-frame fan-outs) keep the sorted order, so no
+  * lane sorts its output again. The range exchange stays AQE-sized: one
+  * result file per query. Decoded media never shuffle.
   */
 object Multimodal {
+
+  /** The narrow id frame `(media_id, carry…)` of `docs`, sorted by
+    * media_id: the input every decode lane projects its decoder over
+    * (header "Scale notes"; PlanQualitySpec fences the shape, and
+    * MultimodalSpec pins each lane's output order). */
+  private[graft] def sortedIds(docs: DataFrame, carry: String*): DataFrame =
+    docs.select(col("doc_id").as("media_id") +: carry.map(col): _*)
+      .orderBy(col("media_id"))
 
   /** Media-table schema: id, kind, bytes, meta(width, height, duration). */
   def mediaFromDocuments(s: SparkSession, dir: String): DataFrame = {
@@ -112,14 +126,13 @@ object Multimodal {
     * content. */
   def q37MultimodalPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media = withFeatures(mediaFromDocuments(s, dir))
+    val media = withFeatures(mediaFromDocuments(s, dir).orderBy($"media_id"))
     val frames = sampleFrames(media)
     frames.select($"media_id", $"kind", $"frame_no",
         round($"frame_ts_s", 2).as("frame_ts_s"),
         length($"content").as("n_bytes"),
         round(element_at($"features", 1), 6).as("f0"),
         round(element_at($"features", 2), 6).as("f1"))
-      .orderBy($"media_id", $"frame_no")
   }
 
   val q37Oracle: String =
@@ -160,36 +173,43 @@ object Multimodal {
     * int64: m·A² ≤ 4·10¹² (exact in double), A² a perfect square, so
     * sqrt-then-round is exact on both sides of the fence.
     *
-    * Scale shape: synth+encode+decode is one task-local UDF per row
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]): one task-local UDF call per row
     * (imperative byte work — the PdfText ladder rung where a UDF is
-    * correct); no shuffle until the presentation sort. */
+    * correct). */
   def q129AudioDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long, nChars: Long) =>
       val n = math.max(16L, math.min(4000L, nChars * 8L)).toInt
       val p = (2L + id % 29L).toInt
       val a = (1000L + (id * 37L) % 31000L).toInt
-      val pcm = Array.tabulate(n)(i => if ((i / p) % 2 == 0) a else -a)
+      val pcm = new Array[Int](n)
+      var i = 0
+      while (i < n) { pcm(i) = if ((i / p) % 2 == 0) a else -a; i += 1 }
       val w = graft.sources.WavAudio.parse(
         graft.sources.WavAudio.encodePcm16Mono(8000, pcm))
       val ss = w.samples
       val m = ss.length
-      val crossings =
-        (1 until m).count(i => (ss(i) >= 0) != (ss(i - 1) >= 0)).toLong
-      val sumSq = ss.foldLeft(0L)((acc, x) => acc + x.toLong * x)
+      // zero crossings, sum of squares and peak in one pass
+      var crossings = 0L; var sumSq = 0L; var peak = 0L
+      i = 0
+      while (i < m) {
+        val x = ss(i)
+        if (i > 0 && (x >= 0) != (ss(i - 1) >= 0)) crossings += 1
+        sumSq += x.toLong * x
+        peak = math.max(peak, math.abs(x).toLong)
+        i += 1
+      }
       val rms = math.round(math.sqrt(sumSq.toDouble / m))
       (w.sampleRate.toLong, m.toLong, 1000L * m / w.sampleRate, rms,
-        crossings * 1000000L / (m - 1),
-        ss.iterator.map(x => math.abs(x).toLong).max)
+        crossings * 1000000L / (m - 1), peak)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"),
-        synthDecode($"doc_id", $"n_chars").as("st"))
+    sortedIds(Tables.documents(s, dir), "n_chars")
+      .select($"media_id", synthDecode($"media_id", $"n_chars").as("st"))
       .select($"media_id",
         $"st._1".as("sample_rate"), $"st._2".as("n_samples"),
         $"st._3".as("duration_ms"), $"st._4".as("rms"),
         $"st._5".as("zcr_x1e6"), $"st._6".as("peak"))
-      .orderBy($"media_id")
   }
 
   val q129Oracle: String =
@@ -222,9 +242,9 @@ object Multimodal {
     * would forgive all of those. The oracle recomputes every stat
     * ANALYTICALLY from doc_id (pure integer arithmetic both sides).
     *
-    * Scale shape: task-local synth+encode+decode per row (the PdfText /
-    * q129 UDF ladder rung — imperative byte work); media bytes never
-    * shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]; the PdfText / q129 UDF ladder rung
+    * — imperative byte work); media bytes never shuffle. */
   def q135ImageDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -255,14 +275,13 @@ object Multimodal {
         bmp.pixels.length.toLong, sumRgb, wsum,
         bmp.pixel(0, 0).toLong, peak)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"))
-      .orderBy($"media_id")
   }
 
   val q135Oracle: String =
@@ -604,9 +623,9 @@ object Multimodal {
     * hash-mismatches; channel sums alone would forgive none of it
     * because wsum weights by row and first_px pins (0,0).
     *
-    * Scale shape: task-local synth+encode+decode per row (the
-    * q129/q135 UDF ladder rung — imperative byte work); media bytes
-    * never shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]; the q129/q135 UDF ladder rung —
+    * imperative byte work); media bytes never shuffle. */
   def q139PngDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -627,14 +646,13 @@ object Multimodal {
           idatChunkSize = if (id % 2 == 0) 64 else Int.MaxValue))
       faceStats(png.width, png.height, png.pixels)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q139Oracle: String =
@@ -700,8 +718,8 @@ object Multimodal {
     * decode invariant R = G = B on every pixel (a stride bug that reads
     * a neighbor's byte breaks it immediately).
     *
-    * Scale shape: task-local synth+encode+decode per row; media bytes
-    * never shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]); media bytes never shuffle. */
   def q142PngGrayDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -742,14 +760,13 @@ object Multimodal {
       (png.width.toLong, png.height.toLong, png.pixels.length.toLong,
         sumG, wsum, png.pixel(0, 0).toLong & 0xff, peak, sumA)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_gray"),
         $"st._5".as("wsum"), $"st._6".as("first_gray"),
         $"st._7".as("peak_gray"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q142Oracle: String =
@@ -788,8 +805,9 @@ object Multimodal {
     * index filter reversed wrong — corrupts sum_rgb/wsum/sum_alpha and
     * hash-mismatches.
     *
-    * Scale shape: task-local synth+encode+decode per row (the q139
-    * ladder rung); media bytes never shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]; the q139 ladder rung); media bytes
+    * never shuffle. */
   def q143PngPaletteDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -833,14 +851,13 @@ object Multimodal {
       (png.width.toLong, png.height.toLong, png.pixels.length.toLong,
         sumRgb, wsum, png.pixel(0, 0).toLong, peak, sumA)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q143Oracle: String =
@@ -884,8 +901,9 @@ object Multimodal {
     * already-green query. Filter cycling runs over the OUTPUT scanline
     * index, so every pass sees several filter types.
     *
-    * Scale shape: identical to q139 — task-local synth+encode+decode
-    * per row; media bytes never shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]), as q139; media bytes never
+    * shuffle. */
   def q145PngInterlacedDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -907,14 +925,13 @@ object Multimodal {
           interlaced = true))
       faceStats(png.width, png.height, png.pixels)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   /** q146 — 16-BIT PNG decode: the high bytes of every 16-bit sample
@@ -928,8 +945,9 @@ object Multimodal {
     * later sample and hash-mismatches. Ids divisible by 5 additionally
     * interlace, composing BOTH new layouts in one container.
     *
-    * Scale shape: identical to q139 — task-local synth+encode+decode
-    * per row; media bytes never shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]), as q139; media bytes never
+    * shuffle. */
   def q146Png16BitDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -957,14 +975,13 @@ object Multimodal {
           interlaced = id % 5 == 0))
       faceStats(png.width, png.height, png.pixels)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   /** q147 — GIF decode (LZW): the dictionary-coded container through
@@ -981,8 +998,9 @@ object Multimodal {
     * index painted opaque — corrupts sum_rgb/wsum/sum_alpha and
     * hash-mismatches.
     *
-    * Scale shape: task-local synth+encode+decode per row (the q139
-    * ladder rung); media bytes never shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]; the q139 ladder rung); media bytes
+    * never shuffle. */
   def q147GifDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -1004,14 +1022,13 @@ object Multimodal {
           subBlockSize = if (id % 4 == 0) 7 else 255))
       faceStats(gif.width, gif.height, gif.pixels)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q147Oracle: String =
@@ -1155,8 +1172,8 @@ object Multimodal {
     * scale "what animations do we hold" is exactly this query: frame
     * counts, durations and bounding geometry without decoding a pixel.
     *
-    * Scale shape: task-local synth+scan per row; only the ≤40-byte
-    * totals move; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+scan once per row after the
+    * exchange ([[sortedIds]]); only the ≤40-byte totals leave the task. */
   def q150GifAnimationReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val scan = udf { (id: Long) =>
@@ -1189,13 +1206,12 @@ object Multimodal {
       (frames.size.toLong, frames.map(_.delayCs.toLong).sum, nPx,
         frames.map(_.width).max.toLong, frames.map(_.height).max.toLong)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), scan($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", scan($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("n_frames"), $"st._2".as("sum_delay_cs"),
         $"st._3".as("sum_frame_px"), $"st._4".as("max_frame_w"),
         $"st._5".as("max_frame_h"))
-      .orderBy($"media_id")
   }
 
   val q150Oracle: String =
@@ -1238,8 +1254,9 @@ object Multimodal {
     * JpegImageSpec's quantization-bound and ImageIO cross-decoder
     * tolerance tests — lossy content has no exact oracle by design.
     *
-    * Scale shape: task-local synth+encode+decode per row (the q139
-    * ladder rung); media bytes never shuffle; one presentation sort. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]; the q139 ladder rung); media bytes
+    * never shuffle. */
   /** q151's synth→encode→decode→stats kernel over an arbitrary doc_id
     * frame — shared with [[graft.tools.CodecScaleProbe]]'s JPEG lane so
     * the 100× probe measures the GRADED pipeline, not a lookalike. */
@@ -1260,14 +1277,13 @@ object Multimodal {
           restartInterval = (id % 3).toInt, subsample = sub))
       faceStats(jpeg.width, jpeg.height, jpeg.pixels)
     }
-    ids.select(col("doc_id").as("media_id"),
-        synthDecode(col("doc_id")).as("st"))
+    sortedIds(ids)
+      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
       .select(col("media_id"),
         col("st._1").as("width"), col("st._2").as("height"),
         col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
         col("st._5").as("wsum"), col("st._6").as("first_px"),
         col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
-      .orderBy(col("media_id"))
   }
 
   def q151JpegDecode(s: SparkSession, dir: String): DataFrame = {
@@ -1308,8 +1324,9 @@ object Multimodal {
     * any progressive-path defect hash-mismatches an artifact pinned by
     * an already-green query.
     *
-    * Scale shape: identical to q151 — task-local synth+decode per row,
-    * only the ≤72-byte stat tuple moves. */
+    * Scale shape: ids sorted first, then synth+decode once per row after
+    * the exchange ([[sortedIds]]), as q151; only the ≤72-byte stat tuple
+    * leaves the task. */
   def q155JpegProgressiveDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -1329,14 +1346,13 @@ object Multimodal {
           subsample = sub))
       faceStats(jpeg.width, jpeg.height, jpeg.pixels)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   /** q152 — JPEG corpus-triage quarantine report: the q144/q149 shape
@@ -1764,8 +1780,9 @@ object Multimodal {
     * the regression pin. Per-row (fmt, n_frames, sum_q) where sum_q is
     * Σ|s| for integer PCM and Σ|k| (= Σ round(|f|·256)) for float.
     *
-    * Scale shape: task-local synth+decode per row; only the ≤30-byte
-    * verdict tuple moves. */
+    * Scale shape: ids sorted first, then synth+decode once per row after
+    * the exchange ([[sortedIds]]); only the ≤30-byte verdict tuple leaves
+    * the task. */
   def q156WavWideDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synth = udf { (id: Long) =>
@@ -1800,11 +1817,10 @@ object Multimodal {
           ("pcm16", w.nFrames.toLong, sa)
       }
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synth($"doc_id").as("t"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synth($"media_id").as("t"))
       .select($"media_id", $"t._1".as("fmt"), $"t._2".as("n_frames"),
         $"t._3".as("sum_q"))
-      .orderBy($"media_id")
   }
 
   val q156Oracle: String =
@@ -1851,11 +1867,10 @@ object Multimodal {
       w.samples.foreach { v => sumAbs += math.abs(v.toLong); sumLin += v }
       (if (law == 6) "alaw" else "ulaw", w.nFrames.toLong, sumAbs, sumLin)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synth($"doc_id").as("t"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synth($"media_id").as("t"))
       .select($"media_id", $"t._1".as("law"), $"t._2".as("n_frames"),
         $"t._3".as("sum_abs"), $"t._4".as("sum_lin"))
-      .orderBy($"media_id")
   }
 
   val q169Oracle: String =
@@ -2151,14 +2166,13 @@ object Multimodal {
         }
       faceStats(png.width, png.height, png.pixels)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q158Oracle: String =
@@ -2222,8 +2236,9 @@ object Multimodal {
     * work: a rotated re-upload must normalize to the same pixels (and
     * phash) as the original.
     *
-    * Scale shape: task-local synth+orient+encode+decode+normalize per
-    * row; only the ≤72-byte stat tuple moves. */
+    * Scale shape: ids sorted first, then
+    * synth+orient+encode+decode+normalize once per row after the exchange
+    * ([[sortedIds]]); only the ≤72-byte stat tuple leaves the task. */
   def q160JpegExifNormalize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -2242,14 +2257,13 @@ object Multimodal {
         JpegImage.parseOrientation(bytes))
       faceStats(up.width, up.height, up.pixels)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q160Oracle: String =
@@ -2419,14 +2433,13 @@ object Multimodal {
         topDown = id % 2 == 0))
       faceStats(b.width, b.height, b.pixels.map(0xff000000 | _))
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q162Oracle: String =
@@ -2469,9 +2482,9 @@ object Multimodal {
     * the transparency path, or the snapshot/dispose ordering
     * hash-mismatches.
     *
-    * Scale shape: task-local synth+decode+composite per row; one
-    * (media_id, frame) explode of ≤4 stat pairs; media bytes never
-    * shuffle. */
+    * Scale shape: ids sorted first, then synth+decode+composite once per
+    * row after the exchange ([[sortedIds]]); the (media_id, frame) explode
+    * of ≤4 stat pairs keeps the id order; media bytes never shuffle. */
   /** q163's synth→composite→per-frame-stats kernel over an arbitrary
     * doc_id frame — shared with [[graft.tools.CodecScaleProbe]]'s
     * animation lane so the 100× probe measures the GRADED pipeline. */
@@ -2510,11 +2523,10 @@ object Multimodal {
         (fr.index, painted, sumRgb)
       }
     }
-    ids.select(col("doc_id").as("media_id"),
-        explode(sample(col("doc_id"))).as("t"))
+    sortedIds(ids)
+      .select(col("media_id"), explode(sample(col("media_id"))).as("t"))
       .select(col("media_id"), col("t._1").as("frame_idx"),
         col("t._2").as("n_painted"), col("t._3").as("sum_rgb"))
-      .orderBy(col("media_id"), col("frame_idx"))
   }
 
   def q163GifFrameSample(s: SparkSession, dir: String): DataFrame = {
@@ -2574,8 +2586,9 @@ object Multimodal {
     * normalized through a wrong transform) hash-mismatches even though
     * the rotation-invariant q157 totals would not notice.
     *
-    * Scale shape: task-local synth+orient+encode+dispatch per row; only
-    * the ≤72-byte stat tuple moves. */
+    * Scale shape: ids sorted first, then synth+orient+encode+dispatch once
+    * per row after the exchange ([[sortedIds]]); only the ≤72-byte stat
+    * tuple leaves the task. */
   def q167OrientedDispatchDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long) =>
@@ -2596,14 +2609,13 @@ object Multimodal {
           s"dispatch face returned $other for an oriented JPEG")
       }
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), synthDecode($"doc_id").as("st"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", synthDecode($"media_id").as("st"))
       .select($"media_id",
         $"st._1".as("width"), $"st._2".as("height"),
         $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
         $"st._5".as("wsum"), $"st._6".as("first_px"),
         $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-      .orderBy($"media_id")
   }
 
   val q167Oracle: String =
@@ -2641,8 +2653,9 @@ object Multimodal {
     * defect in the IFD walk, either LZW width schedule, the predictor,
     * tile edge padding or the orientation mapping hash-mismatches).
     *
-    * Scale shape: task-local synth+encode+dispatch per row; only the
-    * ≤72-byte stat tuple moves. */
+    * Scale shape: ids sorted first, then synth+encode+dispatch once per row
+    * after the exchange ([[sortedIds]]); only the ≤72-byte stat tuple
+    * leaves the task. */
   def q164TiffDecode(s: SparkSession, dir: String): DataFrame =
     tiffStatsOf(Tables.documents(s, dir))
 
@@ -2770,15 +2783,13 @@ object Multimodal {
       }
       faceStats(dec.width, dec.height, dec.pixels)
     }
-    docs
-      .select(col("doc_id").as("media_id"),
-        synthDecode(col("doc_id")).as("st"))
+    sortedIds(docs)
+      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
       .select(col("media_id"),
         col("st._1").as("width"), col("st._2").as("height"),
         col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
         col("st._5").as("wsum"), col("st._6").as("first_px"),
         col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
-      .orderBy(col("media_id"))
   }
 
   val q164Oracle: String =
@@ -3111,8 +3122,9 @@ object Multimodal {
     * (silent first-page decode of a 50-page document is silent data
     * loss) — spec-asserted.
     *
-    * Scale shape: task-local synth+encode+chain-walk per row; one
-    * (doc, page) stat tuple per page moves. */
+    * Scale shape: ids sorted first, then synth+encode+chain-walk once per
+    * row after the exchange ([[sortedIds]]); the (doc, page) explode keeps
+    * the id order, pages ascending. */
   def q170TiffMultiPage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synth = udf { (id: Long) =>
@@ -3135,14 +3147,13 @@ object Multimodal {
         (p, st._1, st._2, st._3, st._4, st._5, st._6, st._7)
       }
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), explode(synth($"doc_id")).as("t"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", explode(synth($"media_id")).as("t"))
       .select($"media_id", $"t._1".as("page"),
         $"t._2".as("width"), $"t._3".as("height"),
         $"t._4".as("n_pixels"), $"t._5".as("sum_rgb"),
         $"t._6".as("wsum"), $"t._7".as("first_px"),
         $"t._8".as("peak_lum"))
-      .orderBy($"media_id", $"page")
   }
 
   val q170Oracle: String =
@@ -3285,8 +3296,9 @@ object Multimodal {
     * additionally pinned by JDK ImageIO parity in both directions
     * (TiffImageSpec).
     *
-    * Scale shape: task-local synth+encode+dispatch per row; only the
-    * ≤72-byte stat tuple moves. */
+    * Scale shape: ids sorted first, then synth+encode+dispatch once per row
+    * after the exchange ([[sortedIds]]); only the ≤72-byte stat tuple
+    * leaves the task. */
   def q172CcittDecode(s: SparkSession, dir: String): DataFrame =
     ccittStatsOf(Tables.documents(s, dir))
 
@@ -3323,15 +3335,13 @@ object Multimodal {
       }
       faceStats(dec.width, dec.height, dec.pixels)
     }
-    docs
-      .select(col("doc_id").as("media_id"),
-        synthDecode(col("doc_id")).as("st"))
+    sortedIds(docs)
+      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
       .select(col("media_id"),
         col("st._1").as("width"), col("st._2").as("height"),
         col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
         col("st._5").as("wsum"), col("st._6").as("first_px"),
         col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
-      .orderBy(col("media_id"))
   }
 
   val q172Oracle: String =
@@ -3372,8 +3382,9 @@ object Multimodal {
     * each block carries a DIFFERENT constant, so a header-offset or
     * predictor-reset defect shifts sum_v/sum_abs.
     *
-    * Scale shape: task-local synth+encode+decode per row; one stat
-    * tuple per doc moves. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]); one stat tuple per doc leaves the
+    * task. */
   def q173AdpcmDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val decode = udf { (id: Long) =>
@@ -3397,11 +3408,10 @@ object Multimodal {
       }
       (w.nFrames.toLong, sumAbs, sumV, peak)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), decode($"doc_id").as("t"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", decode($"media_id").as("t"))
       .select($"media_id", $"t._1".as("n_frames"), $"t._2".as("sum_abs"),
         $"t._3".as("sum_v"), $"t._4".as("peak_abs"))
-      .orderBy($"media_id")
   }
 
   val q173Oracle: String =
@@ -3431,8 +3441,9 @@ object Multimodal {
     * fixture ladder + fuzz (no javax.sound codec exists — the q173
     * posture).
     *
-    * Scale shape: task-local synth+encode+decode per row; one stat
-    * tuple per doc moves. */
+    * Scale shape: ids sorted first, then synth+encode+decode once per row
+    * after the exchange ([[sortedIds]]); one stat tuple per doc leaves the
+    * task. */
   def q174MsAdpcmDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val decode = udf { (id: Long) =>
@@ -3456,11 +3467,10 @@ object Multimodal {
       }
       (w.nFrames.toLong, sumAbs, sumV, peak)
     }
-    Tables.documents(s, dir)
-      .select($"doc_id".as("media_id"), decode($"doc_id").as("t"))
+    sortedIds(Tables.documents(s, dir))
+      .select($"media_id", decode($"media_id").as("t"))
       .select($"media_id", $"t._1".as("n_frames"), $"t._2".as("sum_abs"),
         $"t._3".as("sum_v"), $"t._4".as("peak_abs"))
-      .orderBy($"media_id")
   }
 
   val q174Oracle: String =
@@ -3494,8 +3504,9 @@ object Multimodal {
     * streams and JDK parity both directions are spec-pinned
     * (TiffImageSpec).
     *
-    * Scale shape: task-local synth+encode+dispatch per row; only the
-    * ≤72-byte stat tuple moves. */
+    * Scale shape: ids sorted first, then synth+encode+dispatch once per row
+    * after the exchange ([[sortedIds]]); only the ≤72-byte stat tuple
+    * leaves the task. */
   def q175JpegTiffDecode(s: SparkSession, dir: String): DataFrame =
     jpegTiffStatsOf(Tables.documents(s, dir))
 
@@ -3534,15 +3545,13 @@ object Multimodal {
       }
       faceStats(dec.width, dec.height, dec.pixels)
     }
-    docs
-      .select(col("doc_id").as("media_id"),
-        synthDecode(col("doc_id")).as("st"))
+    sortedIds(docs)
+      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
       .select(col("media_id"),
         col("st._1").as("width"), col("st._2").as("height"),
         col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
         col("st._5").as("wsum"), col("st._6").as("first_px"),
         col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
-      .orderBy(col("media_id"))
   }
 
   val q175Oracle: String =

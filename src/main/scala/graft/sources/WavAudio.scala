@@ -138,23 +138,35 @@ object WavAudio {
     val samples = (format, bits) match {
       case (1, 16) =>
         frameAligned("PCM16")
-        Array.tabulate(dSize / 2) { i =>
-          u16(bytes, dOff + 2 * i).toShort.toInt
+        val a = new Array[Int](dSize / 2)
+        var i = 0
+        while (i < a.length) {
+          a(i) = u16(bytes, dOff + 2 * i).toShort.toInt; i += 1
         }
+        a
       case (1, 8) =>
         frameAligned("PCM8")
-        Array.tabulate(dSize)(i => (bytes(dOff + i) & 0xff) - 128)
+        val a = new Array[Int](dSize)
+        var i = 0
+        while (i < a.length) { a(i) = (bytes(dOff + i) & 0xff) - 128; i += 1 }
+        a
       case (1, 24) =>
         frameAligned("PCM24")
-        Array.tabulate(dSize / 3) { i =>
+        val a = new Array[Int](dSize / 3)
+        var i = 0
+        while (i < a.length) {
           val o = dOff + 3 * i
           val v = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
             ((bytes(o + 2) & 0xff) << 16)
-          (v << 8) >> 8 // sign-extend from 24 bits
+          a(i) = (v << 8) >> 8 // sign-extend from 24 bits
+          i += 1
         }
+        a
       case (3, 32) =>
         frameAligned("FLOAT32")
-        Array.tabulate(dSize / 4) { i =>
+        val a = new Array[Int](dSize / 4)
+        var i = 0
+        while (i < a.length) {
           val v = u32(bytes, dOff + 4 * i).toInt
           // a NaN/Inf sample is never legitimate audio; at corpus
           // scale it silently poisons every downstream aggregate —
@@ -162,8 +174,10 @@ object WavAudio {
           require(java.lang.Float.isFinite(
             java.lang.Float.intBitsToFloat(v)),
             s"non-finite float sample at frame ${i / ch}")
-          v // raw float bits (see Wav doc)
+          a(i) = v // raw float bits (see Wav doc)
+          i += 1
         }
+        a
       case (3, w) =>
         throw new IllegalArgumentException(
           s"IEEE-float format (tag 3) with bit width $w (must be 32)")

@@ -39,7 +39,8 @@ final class VersionedState(stateDir: String) {
 
   /** Read one state table of the current version, if any commit exists. */
   def read(spark: SparkSession, table: String): Option[DataFrame] =
-    readVersion.map(v => spark.read.parquet(s"$stateDir/v__$v/$table"))
+    readVersion.map(v =>
+      graft.sources.Tables.parquet(spark, s"$stateDir/v__$v/$table"))
 
   /** The batchId recorded with the current version (None before the
     * first commit or for versions written by pre-batch-id code). */

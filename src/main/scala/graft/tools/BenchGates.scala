@@ -108,6 +108,35 @@ object BenchGates {
       worse(parseCalibPar(base), history.flatMap(parseCalibPar))
   }
 
+  /** The core count a headline was run at, from `"cpus":N`. None for
+    * lines written before the field existed. */
+  def parseCpus(line: String): Option[Int] =
+    """"cpus":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toInt)
+
+  /** May a run at `cpus` cores be gated against `line`? Per-query times
+    * and the all-cores yardstick both scale with the width, so a
+    * baseline of another width is never comparable. A line without the
+    * field (written before it existed) keeps being gated as before. */
+  private def sameWidth(line: String, cpus: Int): Boolean =
+    parseCpus(line).forall(_ == cpus)
+
+  /** The baseline a run at `cpus` cores gates against, and whether the
+    * configured one was degraded: the configured line, or the best-box
+    * line of the same-width history when the configured one is slow
+    * ([[baselineDegraded]]). Left(reason) when the configured baseline
+    * has another width: the gate is skipped, and the caller says so. */
+  def baselineFor(configured: String, history: Seq[String],
+      cpus: Int): Either[String, (String, Boolean)] =
+    if (!sameWidth(configured, cpus))
+      Left(s"baseline ran at ${parseCpus(configured).get} cpus, this run " +
+        s"at $cpus: regression gate skipped")
+    else {
+      val peers = history.filter(sameWidth(_, cpus))
+      val slow = baselineDegraded(configured, peers)
+      Right((if (slow) bestBaseline(configured +: peers).getOrElse(configured)
+        else configured, slow))
+    }
+
   /** The best-box line among the candidates (min single-thread calib;
     * ties by min parallel calib) — the baseline to gate against when
     * the configured one is degraded. Lines without a calib stamp are

@@ -130,4 +130,29 @@ class BenchGatesSpec extends AnyFunSuite {
       BenchGates.parseQueries(best.get), BenchGates.parseCalib(best.get))
     assert(nBest == Seq("q01")) // caught against the history's best box
   }
+
+  test("a baseline of another width is skipped, never gated") {
+    val at4 = """{"calib_ms":[330,345],"calib_par_ms":[440,460],""" +
+      """"queries":{"q01":1.0},"cpus":4,"sf":"x"}"""
+    val at8 = at4.replace("\"cpus\":4", "\"cpus\":8")
+    assert(BenchGates.parseCpus(at4).contains(4))
+    assert(BenchGates.parseCpus("""{"queries":{"q01":1.0}}""").isEmpty)
+    // the mismatch is refused with a reason naming both widths
+    val skipped = BenchGates.baselineFor(at8, Nil, cpus = 4)
+    assert(skipped.left.exists(r => r.contains("8 cpus") && r.contains("at 4")),
+      skipped)
+    // the same width gates as before
+    assert(BenchGates.baselineFor(at4, Nil, cpus = 4) == Right((at4, false)))
+    // a line without the field (written before it existed) still gates
+    val legacy = """{"calib_ms":[330,345],"queries":{"q01":1.0}}"""
+    assert(BenchGates.baselineFor(legacy, Nil, cpus = 8) == Right((legacy, false)))
+    // a slow baseline is replaced only by a same-width history line: the
+    // faster 8-cpu line is neither the yardstick nor the replacement
+    val slow4 = at4.replace("[330,345]", "[811,790]")
+    val fast8 = at8.replace("[330,345]", "[200,210]")
+    assert(BenchGates.baselineFor(slow4, Seq(fast8), cpus = 4) ==
+      Right((slow4, false)))
+    assert(BenchGates.baselineFor(slow4, Seq(fast8, at4), cpus = 4) ==
+      Right((at4, true)))
+  }
 }

@@ -9,6 +9,45 @@ import org.apache.spark.sql.streaming.Trigger
 /** Multimodal plumbing specs + the stream-stream interval join. */
 class MultimodalSpec extends SparkSuite {
 
+  test("decode lanes return rows in their sort key order") {
+    // the lanes sort their ids before decoding and never sort again;
+    // both oracle checkers sort rows before comparing, so only this
+    // case sees a lost order. The lanes read only `documents`, here
+    // stored in DESCENDING doc_id order, so a lane that lost its sort
+    // returns its rows backwards instead of passing by file order.
+    val dir = java.nio.file.Files.createTempDirectory("graft_order_").toString
+    Tables.documents(spark, sfDir).orderBy(desc("doc_id")).coalesce(1)
+      .write.parquet(s"$dir/documents.parquet")
+    val frameKey = Map(
+      "q37_multimodal_pipeline" -> "frame_no",
+      "q163_gif_frame_sample" -> "frame_idx",
+      "q170_tiff_multipage" -> "page")
+    val lanes = Seq("q37_multimodal_pipeline", "q129_audio_decode",
+      "q135_image_decode", "q139_png_decode", "q142_png_gray_decode",
+      "q143_png_palette_decode", "q145_png_interlaced_decode",
+      "q146_png_16bit_decode", "q147_gif_decode",
+      "q150_gif_animation_report", "q151_jpeg_decode",
+      "q155_jpeg_progressive_decode", "q156_wav_wide_decode",
+      "q158_png_sub8_decode", "q160_jpeg_exif_normalize",
+      "q162_bmp_palette_decode", "q163_gif_frame_sample",
+      "q164_tiff_decode", "q167_oriented_dispatch_decode",
+      "q169_g711_decode", "q170_tiff_multipage", "q172_ccitt_decode",
+      "q173_adpcm_decode", "q174_ms_adpcm_decode",
+      "q175_jpeg_tiff_decode")
+    val unordered = lanes.filter { name =>
+      val df = SparkEntry.queries(name)(spark, dir)
+      val key = "media_id" +: frameKey.get(name).toSeq
+      val idx = key.map(df.schema.fieldIndex)
+      val rows = df.collect().toSeq.map(r =>
+        idx.map(i => r.get(i).asInstanceOf[Number].longValue))
+      assert(rows.nonEmpty, name)
+      rows.zip(rows.tail).exists { case (a, b) =>
+        a.zip(b).find { case (x, y) => x != y }.exists { case (x, y) => x > y }
+      }
+    }
+    assert(unordered.isEmpty, unordered.mkString(", "))
+  }
+
   test("batched mapPartitions decode equals per-row UDF decode") {
     import spark.implicits._
     val media = Multimodal.mediaFromDocuments(spark, sfDir)

@@ -1,6 +1,11 @@
 package graft
 
 import graft.sources.{Bucketing, Tables}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -333,6 +338,46 @@ class PlanQualitySpec extends SparkSuite {
       ).flatten
     }
     assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  /** Range exchanges of more than one partition whose child stage (up
+    * to the next exchange) computes a ScalaUDF. The exchange's
+    * RangePartitioner samples by computing that whole child, so such a
+    * UDF runs twice per row: once for the sample, once in the map stage.
+    * Read from AQE's initial plan, where the exchanges are already in. */
+  private def udfBelowRangeExchange(p: SparkPlan): Int = {
+    def stageHasUdf(q: SparkPlan): Boolean = q match {
+      case _: Exchange => false
+      case _ => q.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) ||
+        q.children.exists(stageHasUdf)
+    }
+    val here = p match {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case r: RangePartitioning if r.numPartitions > 1 &&
+            stageHasUdf(e.child) => 1
+        case _ => 0
+      }
+      case _ => 0
+    }
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => udfBelowRangeExchange(a.initialPlan)
+      case _ => 0
+    }
+    here + inner + p.children.map(udfBelowRangeExchange).sum +
+      p.subqueries.map(udfBelowRangeExchange).sum
+  }
+
+  test("whole surface: no UDF below a multi-partition range exchange " +
+    "(a decoder there runs once for the sampler and once again)") {
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .executedPlan
+      spark.catalog.clearCache()
+      graft.tools.Checkpoints.sweep(spark) // construction-time checkpoints
+      udfBelowRangeExchange(plan) > 0
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} queries: ${offenders.mkString(", ")}")
   }
 
   test("runtime-capped NLJ queries reject an over-cap broadcast batch") {
