@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{PdfImages, Tables}
 
 /** Multimodal (image/audio/video) column plumbing (north-star surface).
   *
@@ -15,26 +16,120 @@ import graft.sources.Tables
   * libraries), injected as a function so a real decoder drops in without
   * touching the plan shape.
   *
-  * Scale notes: every decode lane sorts its ids first and decodes once
-  * after the exchange ([[sortedIds]]). A global sort's RangePartitioner
-  * samples its child by computing the whole child, so a decoder projected
-  * BELOW the sort ran twice per row — once for the sampling job, once in
-  * the map stage. Sorting the narrow id frame and projecting the decoder
-  * above it leaves the sampler reading ids only; the decoder runs once
-  * per row, one JVM call, no driver round-trip. Project and Generate
-  * (frame, page and per-frame fan-outs) keep the sorted order, so no
-  * lane sorts its output again. The range exchange stays AQE-sized: one
-  * result file per query. Decoded media never shuffle.
+  * Two builders carry the codec lanes: [[decodeLane]] (one stats row, or
+  * a fan-out of frame/page rows, per document, in media_id order) and
+  * [[quarantineReport]] (a per-reason triage count over mutated
+  * containers, with its oracle generated from the same class table).
   */
 object Multimodal {
 
   /** The narrow id frame `(media_id, carry…)` of `docs`, sorted by
-    * media_id: the input every decode lane projects its decoder over
-    * (header "Scale notes"; PlanQualitySpec fences the shape, and
-    * MultimodalSpec pins each lane's output order). */
+    * media_id: the input [[decodeLane]] projects its decoder over. */
   private[graft] def sortedIds(docs: DataFrame, carry: String*): DataFrame =
     docs.select(col("doc_id").as("media_id") +: carry.map(col): _*)
       .orderBy(col("media_id"))
+
+  /** A decode lane: `(media_id, stats…)` rows in media_id order, one per
+    * document of `docs`, the stats being `f(doc_id)`. The columns are
+    * named by `names`, or by the fields of `T` when `names` is empty.
+    *
+    * Shape: the ids are sorted first and the decoder runs once per row
+    * after the exchange. A global sort's RangePartitioner samples its
+    * child by computing the whole child, so a decoder projected BELOW the
+    * sort ran twice per row — once for the sampling job, once in the map
+    * stage. Sorting the narrow id frame and projecting the decoder above
+    * it leaves the sampler reading ids only; the decoder runs once per
+    * row, one JVM call, no driver round-trip, and the stats projection
+    * stays a separate Project over its struct (a non-cheap UDF is never
+    * inlined into several consumers). Project and Generate keep the
+    * sorted order, so no lane sorts its output again. The range exchange
+    * stays AQE-sized: one result file per query. Decoded media never
+    * shuffle. PlanQualitySpec fences the shape (no UDF below a range
+    * exchange, one ScalaUDF per lane) and MultimodalSpec pins each lane's
+    * output order. */
+  private[graft] def decodeLane[T: TypeTag](docs: DataFrame, names: String*)(
+      f: Long => T): DataFrame =
+    laneOf(sortedIds(docs), udf(f).apply(col("media_id")), names)
+
+  /** [[decodeLane]] for a decoder that fans one document out to several
+    * (frame, page) rows; the explode keeps the media_id order. */
+  private[graft] def decodeFanOut[T: TypeTag](docs: DataFrame,
+      names: String*)(f: Long => Seq[T]): DataFrame =
+    laneOf(sortedIds(docs), explode(udf(f).apply(col("media_id"))), names)
+
+  private def laneOf(ids: DataFrame, decoded: Column,
+      names: Seq[String]): DataFrame = {
+    val out = ids.select(col("media_id"), decoded.as("st"))
+      .select(col("media_id"), col("st.*"))
+    if (names.isEmpty) out else out.toDF("media_id" +: names: _*)
+  }
+
+  /** One row of a quarantine lane's class table: documents with
+    * `doc_id % k` = the row's index get `bytes(doc_id)`; a parse that
+    * rejects them with a message containing one of `says` is reported
+    * under `reason`. `expect` gives the class's expected quantities as
+    * DuckDB expressions over doc_id (missing ones are 0); a decodable
+    * class declares reason "decoded" and no `says`. */
+  private case class QClass(reason: String, expect: Seq[String],
+      says: String*)(val bytes: Long => Array[Byte])
+
+  /** A quarantine report: per document, the class's bytes go through
+    * `decode`, which returns the decoded quantities and the parser's
+    * reject message, if any (an IllegalArgumentException counts as a
+    * reject with zero quantities). The reason comes from that message —
+    * the first class whose `says` it contains, else "other" — never from
+    * the class index, so the generated [[quarantineSql]] oracle grades
+    * the parser rather than itself. Output: (reason, n_files,
+    * quantities…) in reason order. Task-local synth+mutate+parse per row;
+    * only the short verdict moves to a ≤k-group aggregate. */
+  private def quarantineReport(docs: DataFrame, classes: Seq[QClass],
+      quantities: String*)(
+      decode: Array[Byte] => (Seq[Long], Option[String])): DataFrame = {
+    val triage = udf { (id: Long) =>
+      val c = classes((id % classes.size).toInt)
+      val (q, rejected) =
+        try decode(c.bytes(id))
+        catch {
+          case e: IllegalArgumentException =>
+            (quantities.map(_ => 0L), Some(e.getMessage))
+        }
+      (rejected.fold("decoded")(m =>
+        classes.find(_.says.exists(m.contains)).fold("other")(_.reason)), q)
+    }
+    docs.select(triage(col("doc_id")).as("t"))
+      .groupBy(col("t._1").as("reason"))
+      .agg(count(lit(1)).as("n_files"), quantities.zipWithIndex.map {
+        case (n, i) => sum(element_at(col("t._2"), i + 1)).as(n)
+      }: _*)
+      .orderBy(col("reason"))
+  }
+
+  /** The analytic oracle of a [[quarantineReport]]: each class's reason
+    * and expected quantities, keyed by `doc_id % k`. */
+  private def quarantineSql(classes: Seq[QClass],
+      quantities: String*): String = {
+    def byClass(f: QClass => String) = classes.zipWithIndex
+      .map { case (c, i) => s"WHEN $i THEN ${f(c)}" }
+      .mkString(s"CASE doc_id % ${classes.size} ", " ", " END")
+    val qs = quantities.indices.map(j =>
+      s"${byClass(_.expect.lift(j).getOrElse("0"))} AS q$j")
+    val sums = quantities.zipWithIndex.map { case (n, j) =>
+      s"CAST(sum(q$j) AS BIGINT) AS $n" }
+    s"""WITH d AS (SELECT ${byClass(c => s"'${c.reason}'")} AS reason,
+       |  ${qs.mkString(",\n  ")}
+       |  FROM documents)
+       |SELECT reason, CAST(count(*) AS BIGINT) AS n_files,
+       |  ${sums.mkString(",\n  ")}
+       |FROM d GROUP BY reason ORDER BY reason""".stripMargin
+  }
+
+  /** The splitmix64 finalizer: full avalanche, so consecutive inputs
+    * give unrelated outputs (the fixtures' per-index randomness). */
+  private[graft] def splitmix64(m: Long): Long = {
+    var z = m * 0x9E3779B97F4A7C15L
+    z ^= (z >>> 29); z *= 0xBF58476D1CE4E5B9L
+    z ^ (z >>> 32)
+  }
 
   /** Media-table schema: id, kind, bytes, meta(width, height, duration). */
   def mediaFromDocuments(s: SparkSession, dir: String): DataFrame = {
@@ -67,32 +162,6 @@ object Multimodal {
   def withFeatures(media: DataFrame): DataFrame = {
     val dec = udf(decodeFeaturesStub)
     media.withColumn("features", dec(col("content")))
-  }
-
-  /** Batched decode via mapPartitions — the Scala analog of a
-    * mapInPandas/arrow-batch decode: per-PARTITION codec/model
-    * initialization amortized over the rows (real codecs and ML runtimes
-    * are expensive to construct per row), rows processed in groups of
-    * `batchSize` the way an inference runtime wants its inputs. Output
-    * equals [[withFeatures]] (spec-pinned). */
-  def withFeaturesBatched(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    val spark = media.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val outSchema = media.schema.add("features", ArrayType(DoubleType))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      // per-partition "codec" init happens HERE (the stub is stateless,
-      // a real decoder/model would be constructed once per partition)
-      val decode = decodeFeaturesStub
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { r =>
-          val features = decode(r.getAs[Array[Byte]](contentIdx))
-          Row.fromSeq(r.toSeq :+ features.toSeq)
-        }
-      }
-    }(encoder)
   }
 
   /** Frame sampling: video rows fan out to ceil(duration / `everyS`)
@@ -171,12 +240,9 @@ object Multimodal {
     * crossings = ⌊(n−1)/p⌋; duration = ⌊1000n/8000⌋) — so a parser that
     * mis-reads any header field or sample byte hash-mismatches. All
     * int64: m·A² ≤ 4·10¹² (exact in double), A² a perfect square, so
-    * sqrt-then-round is exact on both sides of the fence.
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]): one task-local UDF call per row
-    * (imperative byte work — the PdfText ladder rung where a UDF is
-    * correct). */
+    * sqrt-then-round is exact on both sides of the fence. The decoder
+    * also reads `n_chars`, so the lane carries it through the sort
+    * ([[decodeLane]]'s shape with one extra input column). */
   def q129AudioDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val synthDecode = udf { (id: Long, nChars: Long) =>
@@ -204,12 +270,9 @@ object Multimodal {
       (w.sampleRate.toLong, m.toLong, 1000L * m / w.sampleRate, rms,
         crossings * 1000000L / (m - 1), peak)
     }
-    sortedIds(Tables.documents(s, dir), "n_chars")
-      .select($"media_id", synthDecode($"media_id", $"n_chars").as("st"))
-      .select($"media_id",
-        $"st._1".as("sample_rate"), $"st._2".as("n_samples"),
-        $"st._3".as("duration_ms"), $"st._4".as("rms"),
-        $"st._5".as("zcr_x1e6"), $"st._6".as("peak"))
+    laneOf(sortedIds(Tables.documents(s, dir), "n_chars"),
+      synthDecode($"media_id", $"n_chars"), Seq("sample_rate", "n_samples",
+        "duration_ms", "rms", "zcr_x1e6", "peak"))
   }
 
   val q129Oracle: String =
@@ -240,14 +303,10 @@ object Multimodal {
     * flips row order, mixes the two storage orientations, swaps
     * BGR↔RGB, or mis-skips padding hash-mismatches — channel sums alone
     * would forgive all of those. The oracle recomputes every stat
-    * ANALYTICALLY from doc_id (pure integer arithmetic both sides).
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]; the PdfText / q129 UDF ladder rung
-    * — imperative byte work); media bytes never shuffle. */
-  def q135ImageDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+    * ANALYTICALLY from doc_id (pure integer arithmetic both sides). BMP
+    * has no alpha, so the lane reports [[faceStats]] without sum_alpha. */
+  def q135ImageDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       val w = (4 + id % 13).toInt
       val h = (3 + id % 7).toInt
       val px = Array.tabulate(w * h) { i =>
@@ -259,33 +318,11 @@ object Multimodal {
       }
       val bmp = graft.sources.BmpImage.parse(
         graft.sources.BmpImage.encode24(w, h, px, topDown = id % 2 == 1))
-      var sumRgb = 0L; var wsum = 0L; var peak = 0L
-      var i = 0
-      while (i < bmp.pixels.length) {
-        val p = bmp.pixels(i)
-        val r = (p >> 16) & 0xff; val g = (p >> 8) & 0xff; val b = p & 0xff
-        val s3 = (r + g + b).toLong
-        sumRgb += s3
-        wsum += (i / bmp.width + 1) * s3
-        val lum = (299L * r + 587L * g + 114L * b)
-        if (lum > peak) peak = lum
-        i += 1
-      }
-      (bmp.width.toLong, bmp.height.toLong,
-        bmp.pixels.length.toLong, sumRgb, wsum,
-        bmp.pixel(0, 0).toLong, peak)
-    }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"))
-  }
+      faceStats(bmp.width, bmp.height, bmp.pixels)
+    }.drop("sum_alpha")
 
-  val q135Oracle: String =
-    """WITH p AS (SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h
+  val q135Oracle: String = faceStatsSql(
+    """p AS (SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h
       |           FROM documents),
       |px AS (SELECT doc_id, w, h, x, y,
       |         (doc_id * 7 + x * 3 + y * 5) % 256 AS r,
@@ -293,17 +330,8 @@ object Multimodal {
       |         (doc_id * 3 + x + y * 13) % 256 AS b
       |       FROM p,
       |         LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN r * 65536 + g * 256 + b END) AS BIGINT) AS first_px,
-      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT) AS peak_lum
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys)""",
+    alpha = false)
 
   /** q136 — image near-dup by perceptual hash: the multimodal member of
     * the dedup family (q26 exact / q28 MinHash / q120 SimHash for text
@@ -621,42 +649,34 @@ object Multimodal {
     * IDAT boundary dropped, RGBA stride confused with RGB, zlib
     * mis-seamed) corrupts sum_rgb/wsum/peak_lum/sum_alpha and
     * hash-mismatches; channel sums alone would forgive none of it
-    * because wsum weights by row and first_px pins (0,0).
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]; the q129/q135 UDF ladder rung —
-    * imperative byte work); media bytes never shuffle. */
-  def q139PngDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
-      val w = (4 + id % 13).toInt
-      val h = (3 + id % 7).toInt
-      val withAlpha = id % 3 == 0
-      val px = Array.tabulate(w * h) { i =>
-        val x = i % w; val y = i / w
-        val r = ((id * 7 + x * 3 + y * 5) % 256).toInt
-        val g = ((id + x * 11 + y) % 256).toInt
-        val b = ((id * 3 + x + y * 13) % 256).toInt
-        val a = if (withAlpha) ((id + x * 5 + y * 3) % 256).toInt else 0xff
-        (a << 24) | (r << 16) | (g << 8) | b
-      }
+    * because wsum weights by row and first_px pins (0,0). */
+  def q139PngDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
+      val (w, h, px) = q139Pixels(id)
       val png = graft.sources.PngImage.parse(
-        graft.sources.PngImage.encode(w, h, px, withAlpha = withAlpha,
+        graft.sources.PngImage.encode(w, h, px, withAlpha = id % 3 == 0,
           filterFor = y => ((y + id) % 5).toInt,
           idatChunkSize = if (id % 2 == 0) 64 else Int.MaxValue))
       faceStats(png.width, png.height, png.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
+
+  /** q139's analytic 0xAARRGGBB face (alpha for id % 3 == 0), shared by
+    * the PNG lanes its oracle grades (q139, q145). */
+  private def q139Pixels(id: Long): (Int, Int, Array[Int]) = {
+    val w = (4 + id % 13).toInt
+    val h = (3 + id % 7).toInt
+    (w, h, Array.tabulate(w * h) { i =>
+      val x = i % w; val y = i / w
+      val r = ((id * 7 + x * 3 + y * 5) % 256).toInt
+      val g = ((id + x * 11 + y) % 256).toInt
+      val b = ((id * 3 + x + y * 13) % 256).toInt
+      val a = if (id % 3 == 0) ((id + x * 5 + y * 3) % 256).toInt else 0xff
+      (a << 24) | (r << 16) | (g << 8) | b
+    })
   }
 
-  val q139Oracle: String =
-    """WITH p AS (SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h
+  val q139Oracle: String = faceStatsSql(
+    """p AS (SELECT doc_id, 4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h
       |           FROM documents),
       |px AS (SELECT doc_id, w, h, x, y,
       |         (doc_id * 7 + x * 3 + y * 5) % 256 AS r,
@@ -666,26 +686,19 @@ object Multimodal {
       |              THEN (doc_id + x * 5 + y * 3) % 256 ELSE 255 END AS a
       |       FROM p,
       |         LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN r * 65536 + g * 256 + b END) AS BIGINT) AS first_px,
-      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT) AS peak_lum,
-      |       CAST(sum(a) AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys)""")
 
-  /** The q139 stat reduction over a decoded 0xAARRGGBB face — ONE copy
-    * shared by q139 (null-interlace 8-bit PNG), q145 (Adam7), q146
-    * (16-bit) and q147 (GIF), so every container layout grades the
-    * SAME artifact shape and the queries can never drift apart in how
-    * they reduce. */
-  private def faceStats(width: Int, height: Int, pixels: Array[Int]):
-      (Long, Long, Long, Long, Long, Long, Long, Long) = {
+  /** The stats every image lane reports over its decoded face. */
+  private[graft] case class Face(width: Long, height: Long, n_pixels: Long,
+      sum_rgb: Long, wsum: Long, first_px: Long, peak_lum: Long,
+      sum_alpha: Long)
+
+  /** The image lanes' stat reduction over a decoded 0xAARRGGBB face, so
+    * every container layout grades the same artifact shape. wsum weights
+    * each row by y + 1 and first_px pins pixel (0,0), so a flipped row
+    * order or a shifted stride changes a stat that channel sums would
+    * forgive. */
+  private def faceStats(width: Int, height: Int, pixels: Array[Int]): Face = {
     var sumRgb = 0L; var wsum = 0L; var peak = 0L; var sumA = 0L
     var y = 0
     while (y < height) {
@@ -704,8 +717,31 @@ object Multimodal {
       }
       y += 1
     }
-    (width.toLong, height.toLong, pixels.length.toLong, sumRgb, wsum,
+    Face(width.toLong, height.toLong, pixels.length.toLong, sumRgb, wsum,
       (pixels(0) & 0xffffff).toLong, peak, sumA)
+  }
+
+  /** The oracle of [[faceStats]]: its reduction over the lane's `px` CTE
+    * of (doc_id, w, h, x, y, r, g, b, a) pixel rows — plus a `page` key
+    * for a per-page lane, and without sum_alpha for a lane that reports
+    * none. Gray lanes emit r = g = b = c. */
+  private def faceStatsSql(ctes: String, page: Boolean = false,
+      alpha: Boolean = true): String = {
+    val key = if (page) ", page" else ""
+    val sumAlpha =
+      if (alpha) ",\n       CAST(sum(a) AS BIGINT) AS sum_alpha" else ""
+    s"""WITH $ctes
+      |SELECT doc_id AS media_id$key,
+      |       CAST(min(w) AS BIGINT) AS width,
+      |       CAST(min(h) AS BIGINT) AS height,
+      |       CAST(count(*) AS BIGINT) AS n_pixels,
+      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
+      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
+      |       CAST(min(CASE WHEN x = 0 AND y = 0
+      |                THEN r * 65536 + g * 256 + b END) AS BIGINT) AS first_px,
+      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT)
+      |         AS peak_lum$sumAlpha
+      |FROM px GROUP BY doc_id$key ORDER BY media_id$key""".stripMargin
   }
 
   /** q142 — grayscale PNG decode (color types 0 and 4): q139's
@@ -716,22 +752,20 @@ object Multimodal {
     * divisible by 3, decoded, and reduced to integer stats the DuckDB
     * oracle recomputes from doc_id. The UDF additionally asserts the
     * decode invariant R = G = B on every pixel (a stride bug that reads
-    * a neighbor's byte breaks it immediately).
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]); media bytes never shuffle. */
-  def q142PngGrayDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+    * a neighbor's byte breaks it immediately); the gray stats are then
+    * [[faceStats]] over one channel (sum_rgb = 3·Σg, peak_lum =
+    * 1000·max g). */
+  def q142PngGrayDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir), "width", "height", "n_pixels",
+        "sum_gray", "wsum", "first_gray", "peak_gray", "sum_alpha") { id =>
       val w = (5 + id % 11).toInt
       val h = (4 + id % 5).toInt
-      val withAlpha = id % 2 == 1
       val gray = Array.tabulate(w * h) { i =>
         val x = i % w; val y = i / w
         ((id * 11 + x * 7 + y * 3) % 256).toInt
       }
       val alpha =
-        if (withAlpha) Array.tabulate(w * h) { i =>
+        if (id % 2 == 1) Array.tabulate(w * h) { i =>
           val x = i % w; val y = i / w
           ((id + x + y * 9) % 256).toInt
         } else Array.emptyIntArray
@@ -739,35 +773,15 @@ object Multimodal {
         graft.sources.PngImage.encodeGray(w, h, gray, alpha,
           filterFor = y => ((y + 2 * id) % 5).toInt,
           idatChunkSize = if (id % 3 == 0) 48 else Int.MaxValue))
-      var sumG = 0L; var wsum = 0L; var peak = 0L; var sumA = 0L
-      var y = 0
-      while (y < png.height) {
-        var x = 0
-        while (x < png.width) {
-          val p = png.pixel(x, y)
-          val r = (p >> 16) & 0xff; val g = (p >> 8) & 0xff
-          val b = p & 0xff
-          require(r == g && g == b,
-            s"grayscale decode broke R=G=B at ($x,$y): $r/$g/$b")
-          sumG += g
-          wsum += (y + 1) * g
-          if (g > peak) peak = g
-          sumA += png.alpha(x, y)
-          x += 1
-        }
-        y += 1
+      png.pixels.indices.foreach { i =>
+        val p = png.pixels(i) & 0xffffff
+        require(p == (p & 0xff) * 0x10101,
+          s"grayscale decode broke R=G=B at pixel $i: ${p.toHexString}")
       }
-      (png.width.toLong, png.height.toLong, png.pixels.length.toLong,
-        sumG, wsum, png.pixel(0, 0).toLong & 0xff, peak, sumA)
+      val f = faceStats(png.width, png.height, png.pixels)
+      (f.width, f.height, f.n_pixels, f.sum_rgb / 3, f.wsum / 3,
+        f.first_px & 0xff, f.peak_lum / 1000, f.sum_alpha)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_gray"),
-        $"st._5".as("wsum"), $"st._6".as("first_gray"),
-        $"st._7".as("peak_gray"), $"st._8".as("sum_alpha"))
-  }
 
   val q142Oracle: String =
     """WITH p AS (SELECT doc_id, 5 + doc_id % 11 AS w, 4 + doc_id % 5 AS h
@@ -803,14 +817,9 @@ object Multimodal {
     * materialization needed). Any defect — a PLTE triple misread, a
     * tRNS entry applied to the wrong index, an opaque default lost, an
     * index filter reversed wrong — corrupts sum_rgb/wsum/sum_alpha and
-    * hash-mismatches.
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]; the q139 ladder rung); media bytes
-    * never shuffle. */
-  def q143PngPaletteDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+    * hash-mismatches. */
+  def q143PngPaletteDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       val w = (4 + id % 9).toInt
       val h = (3 + id % 6).toInt
       val nPal = (2 + id % 255).toInt
@@ -830,38 +839,11 @@ object Multimodal {
         graft.sources.PngImage.encodePalette(w, h, idx, pal,
           filterFor = y => ((y + 3 * id) % 5).toInt,
           idatChunkSize = if (id % 4 == 0) 40 else Int.MaxValue))
-      var sumRgb = 0L; var wsum = 0L; var peak = 0L; var sumA = 0L
-      var y = 0
-      while (y < png.height) {
-        var x = 0
-        while (x < png.width) {
-          val p = png.pixel(x, y)
-          val r = (p >> 16) & 0xff; val g = (p >> 8) & 0xff
-          val b = p & 0xff
-          val s3 = (r + g + b).toLong
-          sumRgb += s3
-          wsum += (y + 1) * s3
-          val lum = 299L * r + 587L * g + 114L * b
-          if (lum > peak) peak = lum
-          sumA += png.alpha(x, y)
-          x += 1
-        }
-        y += 1
-      }
-      (png.width.toLong, png.height.toLong, png.pixels.length.toLong,
-        sumRgb, wsum, png.pixel(0, 0).toLong, peak, sumA)
+      faceStats(png.width, png.height, png.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
-  val q143Oracle: String =
-    """WITH p AS (SELECT doc_id, 4 + doc_id % 9 AS w, 3 + doc_id % 6 AS h,
+  val q143Oracle: String = faceStatsSql(
+    """p AS (SELECT doc_id, 4 + doc_id % 9 AS w, 3 + doc_id % 6 AS h,
       |             2 + doc_id % 255 AS n_pal,
       |             CASE WHEN doc_id % 2 = 0
       |                  THEN 1 + doc_id % (2 + doc_id % 255)
@@ -878,18 +860,7 @@ object Multimodal {
       |         (doc_id * 3 + j * 11) % 256 AS b,
       |         CASE WHEN j < trns_n THEN (doc_id + j * 17) % 256
       |              ELSE 255 END AS a
-      |       FROM ix)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN r * 65536 + g * 256 + b END) AS BIGINT) AS first_px,
-      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT) AS peak_lum,
-      |       CAST(sum(a) AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |       FROM ix)""")
 
   /** q145 — Adam7 INTERLACED PNG decode: q139's exact synthesis and
     * reduction, but every container is encoded with interlace method 1
@@ -899,40 +870,17 @@ object Multimodal {
     * pass origin/stride leaves holes or double-writes in the face and
     * hash-mismatches an artifact whose expected values are pinned by an
     * already-green query. Filter cycling runs over the OUTPUT scanline
-    * index, so every pass sees several filter types.
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]), as q139; media bytes never
-    * shuffle. */
-  def q145PngInterlacedDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
-      val w = (4 + id % 13).toInt
-      val h = (3 + id % 7).toInt
-      val withAlpha = id % 3 == 0
-      val px = Array.tabulate(w * h) { i =>
-        val x = i % w; val y = i / w
-        val r = ((id * 7 + x * 3 + y * 5) % 256).toInt
-        val g = ((id + x * 11 + y) % 256).toInt
-        val b = ((id * 3 + x + y * 13) % 256).toInt
-        val a = if (withAlpha) ((id + x * 5 + y * 3) % 256).toInt else 0xff
-        (a << 24) | (r << 16) | (g << 8) | b
-      }
+    * index, so every pass sees several filter types. */
+  def q145PngInterlacedDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
+      val (w, h, px) = q139Pixels(id)
       val png = graft.sources.PngImage.parse(
-        graft.sources.PngImage.encode(w, h, px, withAlpha = withAlpha,
+        graft.sources.PngImage.encode(w, h, px, withAlpha = id % 3 == 0,
           filterFor = y => ((y + id) % 5).toInt,
           idatChunkSize = if (id % 2 == 0) 64 else Int.MaxValue,
           interlaced = true))
       faceStats(png.width, png.height, png.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
   /** q146 — 16-BIT PNG decode: the high bytes of every 16-bit sample
     * carry q139's analytic channel values and the LOW bytes carry an
@@ -943,14 +891,9 @@ object Multimodal {
     * big-endian sample pairs) and the doubled expected-size accounting,
     * where any hi/lo mix-up, stride slip or dropped byte shifts every
     * later sample and hash-mismatches. Ids divisible by 5 additionally
-    * interlace, composing BOTH new layouts in one container.
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]), as q139; media bytes never
-    * shuffle. */
-  def q146Png16BitDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+    * interlace, composing BOTH new layouts in one container. */
+  def q146Png16BitDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       val w = (4 + id % 13).toInt
       val h = (3 + id % 7).toInt
       val withAlpha = id % 3 == 0
@@ -975,14 +918,6 @@ object Multimodal {
           interlaced = id % 5 == 0))
       faceStats(png.width, png.height, png.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
   /** q147 — GIF decode (LZW): the dictionary-coded container through
     * the q139 grading shape. Per document a single-frame GIF89a is
@@ -996,14 +931,9 @@ object Multimodal {
     * from doc_id. Any defect — a wrong LZW width bump, a dictionary
     * entry mis-chained, an interlace row landed wrong, a transparent
     * index painted opaque — corrupts sum_rgb/wsum/sum_alpha and
-    * hash-mismatches.
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]; the q139 ladder rung); media bytes
-    * never shuffle. */
-  def q147GifDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+    * hash-mismatches. */
+  def q147GifDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       val w = (3 + id % 12).toInt
       val h = (2 + id % 9).toInt
       val nPal = (2 + id % 250).toInt
@@ -1022,41 +952,22 @@ object Multimodal {
           subBlockSize = if (id % 4 == 0) 7 else 255))
       faceStats(gif.width, gif.height, gif.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
-  val q147Oracle: String =
-    """WITH p AS (SELECT doc_id, 3 + doc_id % 12 AS w, 2 + doc_id % 9 AS h,
+  val q147Oracle: String = faceStatsSql(
+    """p AS (SELECT doc_id, 3 + doc_id % 12 AS w, 2 + doc_id % 9 AS h,
       |                  2 + doc_id % 250 AS np FROM documents),
-      |px AS (SELECT doc_id, w, h, np, x, y,
+      |ix AS (SELECT doc_id, w, h, np, x, y,
       |         (doc_id + x + y * 2) % np AS j
       |       FROM p,
       |         LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) xs,
       |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys),
-      |e AS (SELECT doc_id, w, h, x, y,
+      |px AS (SELECT doc_id, w, h, x, y,
       |        (doc_id + j * 7) % 256 AS r,
       |        (doc_id * 5 + j) % 256 AS g,
       |        (j * 11) % 256 AS b,
       |        CASE WHEN doc_id % 3 = 0 AND j = doc_id % np
       |             THEN 0 ELSE 255 END AS a
-      |      FROM px)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN r * 65536 + g * 256 + b END) AS BIGINT) AS first_px,
-      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT) AS peak_lum,
-      |       CAST(sum(a) AS BIGINT) AS sum_alpha
-      |FROM e GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |      FROM ix)""")
 
   /** q148 — the WHOLE q136 phash near-dup pipeline through GIF
     * containers, graded by q136's oracle bit-for-bit (the q141 move,
@@ -1081,84 +992,59 @@ object Multimodal {
     * data stream replaced with a first code beyond the empty table),
     * and a spliced-out color table with the GCT flag cleared. Rejection
     * reasons are classified by named message and reported as
-    * (reason, n_files, sum_pixels) under an analytic DuckDB oracle.
-    *
-    * Scale shape: task-local synth+mutate+parse per row; only the
-    * ≤30-byte verdict moves; one ≤6-group aggregate. */
-  def q149GifQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val triage = udf { (id: Long) =>
-      import graft.sources.GifImage
-      val w = (2 + id % 6).toInt; val h = (2 + id % 4).toInt
-      val nPal = (2 + id % 5).toInt
-      val pal = Array.tabulate(nPal)(j => 0xff000000 |
-        ((((id + j * 7) % 256).toInt) << 16) |
-        ((((id * 5 + j) % 256).toInt) << 8) | (((j * 11) % 256).toInt))
-      val idx = Array.tabulate(w * h) { i =>
-        ((id + (i % w) + (i / w) * 2) % nPal).toInt
-      }
-      val good = GifImage.encode(w, h, idx, pal,
-        interlaced = id % 2 == 1)
-      // container geometry: 13-byte header+LSD, GCT of 2^ceil(log2 nPal)
-      var tableBits = 1
-      while ((1 << tableBits) < nPal) tableBits += 1
-      val bodyAt = 13 + 3 * (1 << tableBits)
-      val bytes = (id % 6) match {
-        case 0 => good
-        case 1 => // animation: image body duplicated before the trailer
-          val body = good.slice(bodyAt, good.length - 1)
-          good.take(bodyAt) ++ body ++ body ++ Array[Byte](0x3b)
-        case 2 => java.util.Arrays.copyOf(good, good.length * 2 / 3)
-        case 3 => good ++ Array[Byte](0)
-        case 4 => // first LZW code beyond the empty table (0xFF at any
-          // minCodeSize < 8 exceeds clear+1): keep header/GCT/descriptor,
-          // replace the data chain
-          good.take(bodyAt + 10 + 1) ++
-            Array[Byte](1, 0xff.toByte, 0, 0x3b)
-        case _ => // GCT flag cleared, table spliced out, no LCT
-          val b = good.take(13) ++ good.drop(bodyAt)
-          b(10) = (b(10) & 0x78).toByte // clear GCT-present bit (and size)
-          b
-      }
-      try {
-        val g = GifImage.parse(bytes)
-        ("decoded", g.pixels.length.toLong)
-      } catch {
-        case e: IllegalArgumentException =>
-          val m = e.getMessage
-          val reason =
-            if (m.contains("multi-frame")) "multi_frame"
-            else if (m.contains("truncated") || m.contains("overruns"))
-              "truncated"
-            else if (m.contains("trailing bytes")) "trailing_bytes"
-            else if (m.contains("beyond table")) "lzw_violation"
-            else if (m.contains("no color table")) "no_color_table"
-            else "other"
-          (reason, 0L)
-      }
+    * (reason, n_files, sum_pixels) under an analytic DuckDB oracle. */
+  def q149GifQuarantine(s: SparkSession, dir: String): DataFrame =
+    quarantineReport(Tables.documents(s, dir), q149Classes, "sum_pixels")(
+      b => (Seq(graft.sources.GifImage.parse(b).pixels.length.toLong), None))
+
+  /** q149's decodable GIF and the offset of its image body: the 13-byte
+    * header+LSD, then a GCT of 2^ceil(log2 nPal) entries. */
+  private def q149Gif(id: Long): (Array[Byte], Int) = {
+    val w = (2 + id % 6).toInt; val h = (2 + id % 4).toInt
+    val nPal = (2 + id % 5).toInt
+    val pal = Array.tabulate(nPal)(j => 0xff000000 |
+      ((((id + j * 7) % 256).toInt) << 16) |
+      ((((id * 5 + j) % 256).toInt) << 8) | (((j * 11) % 256).toInt))
+    val idx = Array.tabulate(w * h) { i =>
+      ((id + (i % w) + (i / w) * 2) % nPal).toInt
     }
-    Tables.documents(s, dir)
-      .select(triage($"doc_id").as("t"))
-      .groupBy($"t._1".as("reason"))
-      .agg(count(lit(1)).as("n_files"), sum($"t._2").as("sum_pixels"))
-      .orderBy($"reason")
+    var tableBits = 1
+    while ((1 << tableBits) < nPal) tableBits += 1
+    (graft.sources.GifImage.encode(w, h, idx, pal, interlaced = id % 2 == 1),
+      13 + 3 * (1 << tableBits))
   }
 
-  val q149Oracle: String =
-    """WITH d AS (SELECT doc_id, doc_id % 6 AS m FROM documents),
-      |r AS (SELECT doc_id,
-      |        CASE m WHEN 0 THEN 'decoded'
-      |               WHEN 1 THEN 'multi_frame'
-      |               WHEN 2 THEN 'truncated'
-      |               WHEN 3 THEN 'trailing_bytes'
-      |               WHEN 4 THEN 'lzw_violation'
-      |               ELSE 'no_color_table' END AS reason,
-      |        CASE WHEN m = 0 THEN (2 + doc_id % 6) * (2 + doc_id % 4)
-      |             ELSE 0 END AS npx
-      |      FROM d)
-      |SELECT reason, CAST(count(*) AS BIGINT) AS n_files,
-      |       CAST(sum(npx) AS BIGINT) AS sum_pixels
-      |FROM r GROUP BY reason ORDER BY reason""".stripMargin
+  private val q149Classes = Seq(
+    QClass("decoded", Seq("(2 + doc_id % 6) * (2 + doc_id % 4)"))(
+      q149Gif(_)._1),
+    QClass("multi_frame", Nil, "multi-frame") { id =>
+      // animation: image body duplicated before the trailer
+      val (good, bodyAt) = q149Gif(id)
+      val body = good.slice(bodyAt, good.length - 1)
+      good.take(bodyAt) ++ body ++ body ++ Array[Byte](0x3b)
+    },
+    QClass("truncated", Nil, "truncated", "overruns") { id =>
+      val good = q149Gif(id)._1
+      java.util.Arrays.copyOf(good, good.length * 2 / 3)
+    },
+    QClass("trailing_bytes", Nil, "trailing bytes")(
+      q149Gif(_)._1 ++ Array[Byte](0)),
+    QClass("lzw_violation", Nil, "beyond table") { id =>
+      // first LZW code beyond the empty table (0xFF at any minCodeSize
+      // < 8 exceeds clear+1): keep header/GCT/descriptor, replace the
+      // data chain
+      val (good, bodyAt) = q149Gif(id)
+      good.take(bodyAt + 10 + 1) ++ Array[Byte](1, 0xff.toByte, 0, 0x3b)
+    },
+    QClass("no_color_table", Nil, "no color table") { id =>
+      // GCT flag cleared, table spliced out, no LCT
+      val (good, bodyAt) = q149Gif(id)
+      val b = good.take(13) ++ good.drop(bodyAt)
+      b(10) = (b(10) & 0x78).toByte // clear GCT-present bit (and size)
+      b
+    })
+
+  val q149Oracle: String = quarantineSql(q149Classes, "sum_pixels")
 
 
   /** q150 — animated-GIF structural report: the metadata face for the
@@ -1170,13 +1056,10 @@ object Multimodal {
     * validation, no pixel expansion — into per-document totals the
     * DuckDB oracle recomputes ANALYTICALLY from doc_id. At corpus
     * scale "what animations do we hold" is exactly this query: frame
-    * counts, durations and bounding geometry without decoding a pixel.
-    *
-    * Scale shape: ids sorted first, then synth+scan once per row after the
-    * exchange ([[sortedIds]]); only the ≤40-byte totals leave the task. */
-  def q150GifAnimationReport(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val scan = udf { (id: Long) =>
+    * counts, durations and bounding geometry without decoding a pixel. */
+  def q150GifAnimationReport(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir), "n_frames", "sum_delay_cs",
+        "sum_frame_px", "max_frame_w", "max_frame_h") { id =>
       import graft.sources.GifImage
       val w = (4 + id % 9).toInt
       val h = (3 + id % 6).toInt
@@ -1206,13 +1089,6 @@ object Multimodal {
       (frames.size.toLong, frames.map(_.delayCs.toLong).sum, nPx,
         frames.map(_.width).max.toLong, frames.map(_.height).max.toLong)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", scan($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("n_frames"), $"st._2".as("sum_delay_cs"),
-        $"st._3".as("sum_frame_px"), $"st._4".as("max_frame_w"),
-        $"st._5".as("max_frame_h"))
-  }
 
   val q150Oracle: String =
     """WITH p AS (SELECT doc_id, 4 + doc_id % 9 AS w, 3 + doc_id % 6 AS h,
@@ -1252,67 +1128,56 @@ object Multimodal {
     * the subsampled MCU structure (4 luma blocks + Cb + Cr per MCU) is
     * hash-gated too. General (non-constant) content is covered by
     * JpegImageSpec's quantization-bound and ImageIO cross-decoder
-    * tolerance tests — lossy content has no exact oracle by design.
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]; the q139 ladder rung); media bytes
-    * never shuffle. */
+    * tolerance tests — lossy content has no exact oracle by design. */
   /** q151's synth→encode→decode→stats kernel over an arbitrary doc_id
     * frame — shared with [[graft.tools.CodecScaleProbe]]'s JPEG lane so
     * the 100× probe measures the GRADED pipeline, not a lookalike. */
-  private[graft] def jpegStatsOf(ids: DataFrame): DataFrame = {
-    val synthDecode = udf { (id: Long) =>
-      val w = (8 * (1 + id % 4)).toInt
-      val h = (8 * (1 + id % 3)).toInt
-      val gray = id % 2 == 0
-      val sub = id % 4 == 1
-      val tile = if (sub) 16 else 8
-      val px = Array.tabulate(w * h) { i =>
-        val c = ((id * 7 + (i % w) / tile * 41 +
-          (i / w) / tile * 113) % 256).toInt
-        if (gray) c else (c << 16) | (c << 8) | c
-      }
+  private[graft] def jpegStatsOf(ids: DataFrame): DataFrame =
+    decodeLane(ids) { id =>
+      val (w, h, px, gray, sub) = q151Pixels(id)
       val jpeg = graft.sources.JpegImage.parse(
         graft.sources.JpegImage.encode(w, h, px, grayscale = gray,
           restartInterval = (id % 3).toInt, subsample = sub))
       faceStats(jpeg.width, jpeg.height, jpeg.pixels)
     }
-    sortedIds(ids)
-      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
-      .select(col("media_id"),
-        col("st._1").as("width"), col("st._2").as("height"),
-        col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
-        col("st._5").as("wsum"), col("st._6").as("first_px"),
-        col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
+
+  /** q151's block-constant face (gray for even ids, R=G=B color for
+    * odd; 16×16 tiles under 4:2:0 for id % 4 == 1), shared with q155:
+    * (w, h, pixels, grayscale, subsample). */
+  private def q151Pixels(id: Long):
+      (Int, Int, Array[Int], Boolean, Boolean) = {
+    val w = (8 * (1 + id % 4)).toInt
+    val h = (8 * (1 + id % 3)).toInt
+    val gray = id % 2 == 0
+    val sub = id % 4 == 1
+    val tile = if (sub) 16 else 8
+    val px = Array.tabulate(w * h) { i =>
+      val c = ((id * 7 + (i % w) / tile * 41 +
+        (i / w) / tile * 113) % 256).toInt
+      if (gray) c else (c << 16) | (c << 8) | c
+    }
+    (w, h, px, gray, sub)
   }
 
-  def q151JpegDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    jpegStatsOf(Tables.documents(s, dir).select($"doc_id"))
-  }
+  def q151JpegDecode(s: SparkSession, dir: String): DataFrame =
+    jpegStatsOf(Tables.documents(s, dir).select(col("doc_id")))
 
-  val q151Oracle: String =
-    """WITH p AS (SELECT doc_id, 8 * (1 + doc_id % 4) AS w,
+  /** The px CTE of a gray lane: r = g = b = c over its `gray` CTE. */
+  private val grayPx =
+    "px AS (SELECT *, c AS r, c AS g, c AS b, 255 AS a FROM gray)"
+
+  val q151Oracle: String = faceStatsSql(
+    s"""p AS (SELECT doc_id, 8 * (1 + doc_id % 4) AS w,
       |                  8 * (1 + doc_id % 3) AS h FROM documents),
-      |px AS (SELECT doc_id, w, h, x, y,
+      |gray AS (SELECT doc_id, w, h, x, y,
       |         (doc_id * 7
       |          + (x // (CASE WHEN doc_id % 4 = 1 THEN 16 ELSE 8 END)) * 41
       |          + (y // (CASE WHEN doc_id % 4 = 1 THEN 16 ELSE 8 END)) * 113
       |         ) % 256 AS c
       |       FROM p,
       |         LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(3 * c) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * 3 * c) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN c * 65536 + c * 256 + c END) AS BIGINT) AS first_px,
-      |       CAST(max(1000 * c) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys),
+      |$grayPx""")
 
   /** q155 — PROGRESSIVE JPEG (SOF2) decode: q151's analytic face
     * carried through the multi-scan container (spectral selection +
@@ -1322,38 +1187,16 @@ object Multimodal {
     * is container-independent (DC survives the point-transform
     * refinement chain bit-for-bit; the AC bands are pure EOB runs), so
     * any progressive-path defect hash-mismatches an artifact pinned by
-    * an already-green query.
-    *
-    * Scale shape: ids sorted first, then synth+decode once per row after
-    * the exchange ([[sortedIds]]), as q151; only the ≤72-byte stat tuple
-    * leaves the task. */
-  def q155JpegProgressiveDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
-      val w = (8 * (1 + id % 4)).toInt
-      val h = (8 * (1 + id % 3)).toInt
-      val gray = id % 2 == 0
-      val sub = id % 4 == 1
-      val tile = if (sub) 16 else 8
-      val px = Array.tabulate(w * h) { i =>
-        val c = ((id * 7 + (i % w) / tile * 41 +
-          (i / w) / tile * 113) % 256).toInt
-        if (gray) c else (c << 16) | (c << 8) | c
-      }
+    * an already-green query. */
+  def q155JpegProgressiveDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
+      val (w, h, px, gray, sub) = q151Pixels(id)
       val jpeg = graft.sources.JpegImage.parse(
         graft.sources.JpegImage.encodeProgressive(w, h, px,
           grayscale = gray, restartInterval = (id % 3).toInt,
           subsample = sub))
       faceStats(jpeg.width, jpeg.height, jpeg.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
   /** q152 — JPEG corpus-triage quarantine report: the q144/q149 shape
     * for the DCT container. Six per-document layout classes: decodable
@@ -1365,71 +1208,44 @@ object Multimodal {
     * entry; a mid-scan truncation; trailing bytes after EOI. Rejection
     * reasons classified by named message, (reason, n_files,
     * sum_pixels) graded against an analytic DuckDB oracle. */
-  def q152JpegQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val triage = udf { (id: Long) =>
-      import graft.sources.JpegImage
-      val w = (8 * (1 + id % 3)).toInt
-      val h = (8 * (1 + id % 2)).toInt
-      val px = Array.tabulate(w * h)(i =>
-        ((id * 11 + (i % w) / 8 * 37 + (i / w) / 8 * 71) % 256).toInt)
-      val good = JpegImage.encode(w, h, px, grayscale = true)
-      def markerAt(m: Int): Int = {
-        var i = 2
-        while (!((good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == m))
-          i += 1
-        i
-      }
-      val bytes = (id % 6) match {
-        case 0 => good
-        case 1 => val b = good.clone()
-          b(markerAt(0xc0) + 1) = 0xc9.toByte; b
-        case 2 => val b = good.clone()
-          b(markerAt(0xc0) + 11) = 0x22.toByte; b
-        case 3 => val b = good.clone()
-          b(markerAt(0xdb) + 5) = 0; b
-        case 4 => java.util.Arrays.copyOf(good, good.length * 3 / 4)
-        case _ => good ++ Array[Byte](0x20)
-      }
-      try {
-        val j = JpegImage.parse(bytes)
-        ("decoded", j.pixels.length.toLong)
-      } catch {
-        case e: IllegalArgumentException =>
-          val m = e.getMessage
-          val reason =
-            if (m.contains("arithmetic")) "arithmetic"
-            else if (m.contains("subsampling")) "subsampled"
-            else if (m.contains("quant")) "bad_quant"
-            else if (m.contains("truncated")) "truncated"
-            else if (m.contains("trailing")) "trailing_bytes"
-            else "other"
-          (reason, 0L)
-      }
-    }
-    Tables.documents(s, dir)
-      .select(triage($"doc_id").as("t"))
-      .groupBy($"t._1".as("reason"))
-      .agg(count(lit(1)).as("n_files"), sum($"t._2").as("sum_pixels"))
-      .orderBy($"reason")
+  def q152JpegQuarantine(s: SparkSession, dir: String): DataFrame =
+    quarantineReport(Tables.documents(s, dir), q152Classes, "sum_pixels")(
+      b => (Seq(graft.sources.JpegImage.parse(b).pixels.length.toLong), None))
+
+  /** q152's decodable grayscale baseline JPEG. */
+  private def q152Jpeg(id: Long): Array[Byte] = {
+    val w = (8 * (1 + id % 3)).toInt
+    val h = (8 * (1 + id % 2)).toInt
+    val px = Array.tabulate(w * h)(i =>
+      ((id * 11 + (i % w) / 8 * 37 + (i / w) / 8 * 71) % 256).toInt)
+    graft.sources.JpegImage.encode(w, h, px, grayscale = true)
   }
 
-  val q152Oracle: String =
-    """WITH d AS (SELECT doc_id, doc_id % 6 AS m FROM documents),
-      |r AS (SELECT doc_id,
-      |        CASE m WHEN 0 THEN 'decoded'
-      |               WHEN 1 THEN 'arithmetic'
-      |               WHEN 2 THEN 'subsampled'
-      |               WHEN 3 THEN 'bad_quant'
-      |               WHEN 4 THEN 'truncated'
-      |               ELSE 'trailing_bytes' END AS reason,
-      |        CASE WHEN m = 0
-      |             THEN 8 * (1 + doc_id % 3) * 8 * (1 + doc_id % 2)
-      |             ELSE 0 END AS npx
-      |      FROM d)
-      |SELECT reason, CAST(count(*) AS BIGINT) AS n_files,
-      |       CAST(sum(npx) AS BIGINT) AS sum_pixels
-      |FROM r GROUP BY reason ORDER BY reason""".stripMargin
+  /** q152's JPEG with the byte `at` past its first 0xFF `marker` set to
+    * `v`. */
+  private def q152Patched(id: Long, marker: Int, at: Int,
+      v: Int): Array[Byte] = {
+    val b = q152Jpeg(id)
+    var i = 2
+    while (!((b(i) & 0xff) == 0xff && (b(i + 1) & 0xff) == marker)) i += 1
+    b(i + at) = v.toByte
+    b
+  }
+
+  private val q152Classes = Seq(
+    QClass("decoded",
+      Seq("8 * (1 + doc_id % 3) * 8 * (1 + doc_id % 2)"))(q152Jpeg),
+    QClass("arithmetic", Nil, "arithmetic")(q152Patched(_, 0xc0, 1, 0xc9)),
+    QClass("subsampled", Nil, "subsampling")(q152Patched(_, 0xc0, 11, 0x22)),
+    QClass("bad_quant", Nil, "quant")(q152Patched(_, 0xdb, 5, 0)),
+    QClass("truncated", Nil, "truncated") { id =>
+      val good = q152Jpeg(id)
+      java.util.Arrays.copyOf(good, good.length * 3 / 4)
+    },
+    QClass("trailing_bytes", Nil, "trailing")(
+      q152Jpeg(_) ++ Array[Byte](0x20)))
+
+  val q152Oracle: String = quarantineSql(q152Classes, "sum_pixels")
 
   /** q153 — mixed-corpus container dispatch: the five strict codecs
     * composed into ONE ingest operator
@@ -1577,82 +1393,57 @@ object Multimodal {
     * r12-advisor partial-frame gate). Classified by named message,
     * (reason, n_files, sum_frames, sum_abs) under an analytic DuckDB
     * oracle. */
-  def q154WavQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val triage = udf { (id: Long) =>
-      import graft.sources.WavAudio
-      val n = (4 + id % 60).toInt
-      val rate = (8000 + id % 1000).toInt
-      val samples = Array.tabulate(n)(i =>
-        (((id * 31 + i * 17) % 65536) - 32768).toInt)
-      val good = WavAudio.encodePcm16Mono(rate, samples)
-      // encoder layout is fixed: fmt tag at 20, bits at 34, data size
-      // at 52 (RIFF 12 + fmt 24 + LIST 12 + data header)
-      val bytes = (id % 6) match {
-        case 0 => good
-        case 1 => val b = good.clone(); b(20) = 0x55; b // MPEG Layer 3
-          // tag (retargeted TWICE in round 18: first IMA — tag 0x11 —
-          // became decodable via q173 while tag 2 MS-ADPCM stayed a
-          // valid gate, then q174 made MS-ADPCM itself decodable, so
-          // the class moved onto 0x55 in the same commit — compressed
-          // bitstream audio stays out of scope; the q144 retarget
-          // invariant, 8th application)
-        case 2 => val b = good.clone(); b(34) = 20; b // 20-bit width
-        case 3 => java.util.Arrays.copyOf(good, good.length * 2 / 3)
-        case 4 => val b = good.clone()
-          b(0) = 'J'; b(1) = 'U'; b(2) = 'N'; b(3) = 'K'; b
-        case _ => val b = good.clone()
-          val ds = n * 2 - 1
-          b(52) = (ds & 0xff).toByte; b(53) = ((ds >> 8) & 0xff).toByte
-          b
-      }
-      try {
-        val w = WavAudio.parse(bytes)
-        var sumAbs = 0L
-        w.samples.foreach(v => sumAbs += math.abs(v))
-        ("decoded", w.nFrames.toLong, sumAbs)
-      } catch {
-        case e: IllegalArgumentException =>
-          val m = e.getMessage
-          val reason =
-            if (m.contains("format tag")) "format_unsupported"
-            else if (m.contains("bit width")) "width_unsupported"
-            else if (m.contains("RIFF size")) "truncated"
-            else if (m.contains("bad magic")) "bad_magic"
-            else if (m.contains("not a multiple")) "misaligned_data"
-            else "other"
-          (reason, 0L, 0L)
-      }
+  def q154WavQuarantine(s: SparkSession, dir: String): DataFrame =
+    quarantineReport(Tables.documents(s, dir), q154Classes, "sum_frames",
+        "sum_abs") { b =>
+      val w = graft.sources.WavAudio.parse(b)
+      var sumAbs = 0L
+      w.samples.foreach(v => sumAbs += math.abs(v))
+      (Seq(w.nFrames.toLong, sumAbs), None)
     }
-    Tables.documents(s, dir)
-      .select(triage($"doc_id").as("t"))
-      .groupBy($"t._1".as("reason"))
-      .agg(count(lit(1)).as("n_files"), sum($"t._2").as("sum_frames"),
-        sum($"t._3").as("sum_abs"))
-      .orderBy($"reason")
+
+  /** A copy of q154's decodable PCM16 WAV with `patch` applied. The
+    * encoder layout is fixed: fmt tag at 20, bits at 34, data size at
+    * 52 (RIFF 12 + fmt 24 + LIST 12 + data header). */
+  private def q154Wav(id: Long)(
+      patch: Array[Byte] => Unit = _ => ()): Array[Byte] = {
+    val n = (4 + id % 60).toInt
+    val samples = Array.tabulate(n)(i =>
+      (((id * 31 + i * 17) % 65536) - 32768).toInt)
+    val b = graft.sources.WavAudio.encodePcm16Mono(
+      (8000 + id % 1000).toInt, samples)
+    patch(b)
+    b
   }
 
-  val q154Oracle: String =
-    """WITH d AS (SELECT doc_id, doc_id % 6 AS m, 4 + doc_id % 60 AS n
-      |           FROM documents),
-      |dec AS (SELECT d.doc_id, sum(abs((d.doc_id * 31 + i * 17) % 65536
-      |                                 - 32768)) AS sa
-      |        FROM d, LATERAL (SELECT unnest(generate_series(0, n - 1))
-      |                         AS i) s
-      |        WHERE d.m = 0 GROUP BY d.doc_id),
-      |r AS (SELECT d.doc_id,
-      |        CASE d.m WHEN 0 THEN 'decoded'
-      |                 WHEN 1 THEN 'format_unsupported'
-      |                 WHEN 2 THEN 'width_unsupported'
-      |                 WHEN 3 THEN 'truncated' WHEN 4 THEN 'bad_magic'
-      |                 ELSE 'misaligned_data' END AS reason,
-      |        CASE WHEN d.m = 0 THEN d.n ELSE 0 END AS nf,
-      |        CASE WHEN d.m = 0 THEN dec.sa ELSE 0 END AS sa
-      |      FROM d LEFT JOIN dec ON d.doc_id = dec.doc_id)
-      |SELECT reason, CAST(count(*) AS BIGINT) AS n_files,
-      |       CAST(sum(nf) AS BIGINT) AS sum_frames,
-      |       CAST(sum(sa) AS BIGINT) AS sum_abs
-      |FROM r GROUP BY reason ORDER BY reason""".stripMargin
+  private val q154Classes = Seq(
+    QClass("decoded", Seq("4 + doc_id % 60",
+      """(SELECT sum(abs((doc_id * 31 + i * 17) % 65536 - 32768))
+        |     FROM (SELECT unnest(generate_series(0, 3 + doc_id % 60)) AS i))"""
+        .stripMargin))(q154Wav(_)()),
+    // MPEG Layer 3 tag (retargeted TWICE in round 18: first IMA — tag
+    // 0x11 — became decodable via q173 while tag 2 MS-ADPCM stayed a
+    // valid gate, then q174 made MS-ADPCM itself decodable, so the
+    // class moved onto 0x55 in the same commit — compressed bitstream
+    // audio stays out of scope; the q144 retarget invariant, 8th
+    // application)
+    QClass("format_unsupported", Nil, "format tag")(q154Wav(_)(_(20) = 0x55)),
+    QClass("width_unsupported", Nil, "bit width")(q154Wav(_)(_(34) = 20)),
+    QClass("truncated", Nil, "RIFF size") { id =>
+      val good = q154Wav(id)()
+      java.util.Arrays.copyOf(good, good.length * 2 / 3)
+    },
+    QClass("bad_magic", Nil, "bad magic")(q154Wav(_) { b =>
+      b(0) = 'J'; b(1) = 'U'; b(2) = 'N'; b(3) = 'K'
+    }),
+    QClass("misaligned_data", Nil, "not a multiple") { id =>
+      q154Wav(id) { b =>
+        val ds = (4 + id % 60).toInt * 2 - 1
+        b(52) = (ds & 0xff).toByte; b(53) = ((ds >> 8) & 0xff).toByte
+      }
+    })
+
+  val q154Oracle: String = quarantineSql(q154Classes, "sum_frames", "sum_abs")
 
   /** q144 — PNG corpus-triage quarantine report: the FAILED-isolation
     * shape (S9) applied to the strict codec. At 10⁹ images, "strict
@@ -1673,103 +1464,77 @@ object Multimodal {
     * the DuckDB oracle recomputes the expected triage analytically from
     * doc_id, so a misclassified rejection (the wrong gate firing first,
     * a rejection that stopped rejecting, a decode that changed pixel
-    * count) hash-mismatches.
-    *
-    * Scale shape: task-local synth+mutate+parse per row; only the
-    * ≤30-byte (reason, npx) verdict moves; one ≤7-group aggregate. */
-  def q144PngQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val triage = udf { (id: Long) =>
-      import graft.sources.PngImage
-      def rechunkIhdrCrc(b: Array[Byte]): Array[Byte] = {
-        val crc = new java.util.zip.CRC32()
-        crc.update(b, 12, 4 + 13) // IHDR type + data
-        val v = crc.getValue
-        val o = 12 + 4 + 13
-        b(o) = ((v >>> 24) & 0xff).toByte
-        b(o + 1) = ((v >>> 16) & 0xff).toByte
-        b(o + 2) = ((v >>> 8) & 0xff).toByte
-        b(o + 3) = (v & 0xff).toByte
-        b
-      }
-      def rgb(): Array[Byte] = {
-        val w = (3 + id % 5).toInt; val h = (2 + id % 4).toInt
-        val px = Array.tabulate(w * h) { i =>
-          val x = i % w; val y = i / w
-          0xff000000 | ((((id * 7 + x) % 256).toInt) << 16) |
-            ((((id + y * 3) % 256).toInt) << 8) | (((id * 3 + x + y) % 256).toInt)
-        }
-        PngImage.encode(w, h, px, withAlpha = false,
-          filterFor = y => ((y + id) % 5).toInt)
-      }
-      def palette(): Array[Byte] = {
-        val w = (2 + id % 6).toInt; val h = (2 + id % 3).toInt
-        val nPal = (2 + id % 5).toInt
-        val pal = Array.tabulate(nPal)(j => 0xff000000 |
-          ((((id + j * 7) % 256).toInt) << 16) |
-          ((((id * 5 + j) % 256).toInt) << 8) | (((j * 11) % 256).toInt))
-        val idx = Array.tabulate(w * h) { i =>
-          ((id + (i % w) + (i / w) * 2) % nPal).toInt
-        }
-        PngImage.encodePalette(w, h, idx, pal)
-      }
-      val bytes = (id % 7) match {
-        case 0 => rgb()
-        case 1 => // sub-8-bit depth: valid container, depth byte patched
-          val b = rgb(); b(24) = 4; rechunkIhdrCrc(b)
-        case 2 => // compression method 1: valid container, byte patched
-          val b = rgb(); b(26) = 1; rechunkIhdrCrc(b)
-        case 3 => // type-3 without PLTE: splice the palette chunk out
-          val b = palette()
-          val nPal = (2 + id % 5).toInt
-          val plteLen = 12 + 3 * nPal // chunk framing + RGB triples
-          b.take(33) ++ b.drop(33 + plteLen)
-        case 4 => // flipped IDAT CRC byte (valid everywhere else)
-          val b = rgb(); b(b.length - 13) = (b(b.length - 13) ^ 0xff).toByte; b
-        case 5 => // truncation into the IEND chunk
-          val b = rgb(); java.util.Arrays.copyOf(b, b.length - 10)
-        case _ => palette()
-      }
-      try {
-        val p = PngImage.parse(bytes)
-        ("decoded", p.pixels.length.toLong)
-      } catch {
-        case e: IllegalArgumentException =>
-          val m = e.getMessage
-          val reason =
-            if (m.contains("bit depth")) "depth_unsupported"
-            else if (m.contains("compression")) "compression_unsupported"
-            else if (m.contains("without PLTE")) "palette_missing_plte"
-            else if (m.contains("CRC")) "crc_mismatch"
-            else if (m.contains("truncated")) "truncated"
-            else "other"
-          (reason, 0L)
-      }
+    * count) hash-mismatches. */
+  def q144PngQuarantine(s: SparkSession, dir: String): DataFrame =
+    quarantineReport(Tables.documents(s, dir), q144Classes, "sum_pixels")(
+      b => (Seq(graft.sources.PngImage.parse(b).pixels.length.toLong), None))
+
+  /** q144's decodable truecolor PNG. */
+  private def q144Rgb(id: Long): Array[Byte] = {
+    val w = (3 + id % 5).toInt; val h = (2 + id % 4).toInt
+    val px = Array.tabulate(w * h) { i =>
+      val x = i % w; val y = i / w
+      0xff000000 | ((((id * 7 + x) % 256).toInt) << 16) |
+        ((((id + y * 3) % 256).toInt) << 8) | (((id * 3 + x + y) % 256).toInt)
     }
-    Tables.documents(s, dir)
-      .select(triage($"doc_id").as("t"))
-      .groupBy($"t._1".as("reason"))
-      .agg(count(lit(1)).as("n_files"), sum($"t._2").as("sum_pixels"))
-      .orderBy($"reason")
+    graft.sources.PngImage.encode(w, h, px, withAlpha = false,
+      filterFor = y => ((y + id) % 5).toInt)
   }
 
-  val q144Oracle: String =
-    """WITH d AS (SELECT doc_id, doc_id % 7 AS m FROM documents),
-      |r AS (SELECT doc_id,
-      |        CASE WHEN m IN (0, 6) THEN 'decoded'
-      |             WHEN m = 1 THEN 'depth_unsupported'
-      |             WHEN m = 2 THEN 'compression_unsupported'
-      |             WHEN m = 3 THEN 'palette_missing_plte'
-      |             WHEN m = 4 THEN 'crc_mismatch'
-      |             ELSE 'truncated' END AS reason,
-      |        CASE WHEN m = 0 THEN (3 + doc_id % 5) * (2 + doc_id % 4)
-      |             WHEN m = 6 THEN (2 + doc_id % 6) * (2 + doc_id % 3)
-      |             ELSE 0 END AS npx
-      |      FROM d)
-      |SELECT reason, CAST(count(*) AS BIGINT) AS n_files,
-      |       CAST(sum(npx) AS BIGINT) AS sum_pixels
-      |FROM r GROUP BY reason ORDER BY reason""".stripMargin
+  /** q144's decodable palette PNG. */
+  private def q144Palette(id: Long): Array[Byte] = {
+    val w = (2 + id % 6).toInt; val h = (2 + id % 3).toInt
+    val nPal = (2 + id % 5).toInt
+    val pal = Array.tabulate(nPal)(j => 0xff000000 |
+      ((((id + j * 7) % 256).toInt) << 16) |
+      ((((id * 5 + j) % 256).toInt) << 8) | (((j * 11) % 256).toInt))
+    val idx = Array.tabulate(w * h) { i =>
+      ((id + (i % w) + (i / w) * 2) % nPal).toInt
+    }
+    graft.sources.PngImage.encodePalette(w, h, idx, pal)
+  }
 
+  /** q144's truecolor PNG with IHDR byte `at` set to `v` and the IHDR
+    * CRC recomputed, so ONLY the named gate can fire. */
+  private def q144Ihdr(id: Long, at: Int, v: Byte): Array[Byte] = {
+    val b = q144Rgb(id)
+    b(at) = v
+    val crc = new java.util.zip.CRC32()
+    crc.update(b, 12, 4 + 13) // IHDR type + data
+    val c = crc.getValue
+    val o = 12 + 4 + 13
+    b(o) = ((c >>> 24) & 0xff).toByte
+    b(o + 1) = ((c >>> 16) & 0xff).toByte
+    b(o + 2) = ((c >>> 8) & 0xff).toByte
+    b(o + 3) = (c & 0xff).toByte
+    b
+  }
+
+  private val q144Classes = Seq(
+    QClass("decoded", Seq("(3 + doc_id % 5) * (2 + doc_id % 4)"))(q144Rgb),
+    QClass("depth_unsupported", Nil, "bit depth")(q144Ihdr(_, 24, 4)),
+    QClass("compression_unsupported", Nil, "compression")(q144Ihdr(_, 26, 1)),
+    QClass("palette_missing_plte", Nil, "without PLTE") { id =>
+      // type-3 without PLTE: splice the palette chunk out
+      val b = q144Palette(id)
+      val plteLen = 12 + 3 * (2 + id % 5).toInt // framing + RGB triples
+      b.take(33) ++ b.drop(33 + plteLen)
+    },
+    QClass("crc_mismatch", Nil, "CRC") { id =>
+      // flipped IDAT CRC byte (valid everywhere else)
+      val b = q144Rgb(id)
+      b(b.length - 13) = (b(b.length - 13) ^ 0xff).toByte
+      b
+    },
+    QClass("truncated", Nil, "truncated") { id =>
+      // truncation into the IEND chunk
+      val b = q144Rgb(id)
+      java.util.Arrays.copyOf(b, b.length - 10)
+    },
+    QClass("decoded", Seq("(2 + doc_id % 6) * (2 + doc_id % 3)"))(
+      q144Palette))
+
+  val q144Oracle: String = quarantineSql(q144Classes, "sum_pixels")
 
   /** q156 — WAV decode across the WIDENED sample-format family
     * (round 16): 24-bit PCM and IEEE-float (tag 3) joined the 8/16-bit
@@ -1778,14 +1543,9 @@ object Multimodal {
     * values k/256, every one exactly representable in binary32, so the
     * analytic oracle is EXACT — the verdict's aperture), and PCM16 as
     * the regression pin. Per-row (fmt, n_frames, sum_q) where sum_q is
-    * Σ|s| for integer PCM and Σ|k| (= Σ round(|f|·256)) for float.
-    *
-    * Scale shape: ids sorted first, then synth+decode once per row after
-    * the exchange ([[sortedIds]]); only the ≤30-byte verdict tuple leaves
-    * the task. */
-  def q156WavWideDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synth = udf { (id: Long) =>
+    * Σ|s| for integer PCM and Σ|k| (= Σ round(|f|·256)) for float. */
+  def q156WavWideDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir), "fmt", "n_frames", "sum_q") { id =>
       import graft.sources.WavAudio
       val n = (4 + id % 50).toInt
       val rate = (8000 + id % 1000).toInt
@@ -1817,11 +1577,6 @@ object Multimodal {
           ("pcm16", w.nFrames.toLong, sa)
       }
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synth($"media_id").as("t"))
-      .select($"media_id", $"t._1".as("fmt"), $"t._2".as("n_frames"),
-        $"t._3".as("sum_q"))
-  }
 
   val q156Oracle: String =
     """WITH d AS (SELECT doc_id, doc_id % 3 AS m, 4 + doc_id % 50 AS n
@@ -1853,9 +1608,9 @@ object Multimodal {
     * A-law's set bit means POSITIVE) that |·| alone would hide. The
     * DuckDB oracle replays the exact ITU integer expansion from
     * doc_id. */
-  def q169G711Decode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synth = udf { (id: Long) =>
+  def q169G711Decode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir), "law", "n_frames", "sum_abs",
+        "sum_lin") { id =>
       import graft.sources.WavAudio
       val law = if (id % 2 == 0) 6 else 7
       val n = (4 + id % 50).toInt
@@ -1867,11 +1622,6 @@ object Multimodal {
       w.samples.foreach { v => sumAbs += math.abs(v.toLong); sumLin += v }
       (if (law == 6) "alaw" else "ulaw", w.nFrames.toLong, sumAbs, sumLin)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synth($"media_id").as("t"))
-      .select($"media_id", $"t._1".as("law"), $"t._2".as("n_frames"),
-        $"t._3".as("sum_abs"), $"t._4".as("sum_lin"))
-  }
 
   val q169Oracle: String =
     """WITH d AS (SELECT doc_id, doc_id % 2 AS odd, 4 + doc_id % 50 AS n
@@ -2138,9 +1888,8 @@ object Multimodal {
     * is exercised under every filter type on both lanes. Same
     * faceStats artifact as the rest of the PNG ladder; analytic DuckDB
     * oracle recomputes every stat from doc_id. */
-  def q158PngSub8Decode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+  def q158PngSub8Decode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       import graft.sources.PngImage
       val depth = Array(1, 2, 4)((id % 3).toInt)
       val w = (3 + id % 6).toInt; val h = (2 + id % 4).toInt
@@ -2166,17 +1915,9 @@ object Multimodal {
         }
       faceStats(png.width, png.height, png.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
-  val q158Oracle: String =
-    """WITH d AS (SELECT doc_id,
+  val q158Oracle: String = faceStatsSql(
+    """d AS (SELECT doc_id,
       |             CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 4
       |               END AS dep,
       |             3 + doc_id % 6 AS w, 2 + doc_id % 4 AS h,
@@ -2205,22 +1946,11 @@ object Multimodal {
       |           * (CASE d.dep WHEN 1 THEN 255 WHEN 2 THEN 85 ELSE 17 END)
       |         ELSE
       |           (((d.doc_id + x * 2 + y) % d.npal) * 53) % 256
-      |         END AS b
+      |         END AS b,
+      |         255 AS a
       |       FROM d,
       |         LATERAL (SELECT unnest(generate_series(0, d.w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN r * 65536 + g * 256 + b END) AS BIGINT)
-      |         AS first_px,
-      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)""")
 
   /** q160 — EXIF-ORIENTED JPEG decode, NORMALIZED: per document a
     * block-constant canonical image is stored under one of the eight
@@ -2234,14 +1964,9 @@ object Multimodal {
     * the orientation analog of the q141 container-independence move.
     * This is the lane that makes decoded faces usable for near-dup
     * work: a rotated re-upload must normalize to the same pixels (and
-    * phash) as the original.
-    *
-    * Scale shape: ids sorted first, then
-    * synth+orient+encode+decode+normalize once per row after the exchange
-    * ([[sortedIds]]); only the ≤72-byte stat tuple leaves the task. */
-  def q160JpegExifNormalize(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+    * phash) as the original. */
+  def q160JpegExifNormalize(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       import graft.sources.JpegImage
       val wc = (8 * (1 + id % 3)).toInt
       val hc = (8 * (1 + id % 2)).toInt
@@ -2257,34 +1982,16 @@ object Multimodal {
         JpegImage.parseOrientation(bytes))
       faceStats(up.width, up.height, up.pixels)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
-  val q160Oracle: String =
-    """WITH p AS (SELECT doc_id, 8 * (1 + doc_id % 3) AS w,
+  val q160Oracle: String = faceStatsSql(
+    s"""p AS (SELECT doc_id, 8 * (1 + doc_id % 3) AS w,
       |                  8 * (1 + doc_id % 2) AS h FROM documents),
-      |px AS (SELECT doc_id, w, h, x, y,
+      |gray AS (SELECT doc_id, w, h, x, y,
       |         (doc_id * 13 + (x // 8) * 37 + (y // 8) * 59) % 256 AS c
       |       FROM p,
       |         LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(3 * c) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * 3 * c) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN c * 65536 + c * 256 + c END) AS BIGINT) AS first_px,
-      |       CAST(max(1000 * c) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys),
+      |$grayPx""")
 
 
   /** q161 — ORIENTED near-dup grouping: the end-to-end claim q160's
@@ -2416,9 +2123,8 @@ object Multimodal {
     * no alpha — the face is forced opaque like the dispatch path). The
     * DuckDB oracle recomputes the palette lookup arithmetically (the
     * q143 move, applied to the BMP container). */
-  def q162BmpPaletteDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+  def q162BmpPaletteDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       import graft.sources.BmpImage
       val w = (3 + id % 7).toInt; val h = (2 + id % 4).toInt
       val nPal = (2 + id % 9).toInt
@@ -2433,39 +2139,20 @@ object Multimodal {
         topDown = id % 2 == 0))
       faceStats(b.width, b.height, b.pixels.map(0xff000000 | _))
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
-  val q162Oracle: String =
-    """WITH d AS (SELECT doc_id, 3 + doc_id % 7 AS w, 2 + doc_id % 4 AS h,
+  val q162Oracle: String = faceStatsSql(
+    """d AS (SELECT doc_id, 3 + doc_id % 7 AS w, 2 + doc_id % 4 AS h,
       |                  2 + doc_id % 9 AS npal FROM documents),
       |px AS (SELECT d.doc_id, d.w, d.h, x, y,
       |         (d.doc_id * 11
       |          + ((d.doc_id + x * 3 + y) % d.npal) * 29) % 256 AS r,
       |         (d.doc_id * 3
       |          + ((d.doc_id + x * 3 + y) % d.npal) * 17) % 256 AS g,
-      |         (d.doc_id + ((d.doc_id + x * 3 + y) % d.npal) * 41) % 256 AS b
+      |         (d.doc_id + ((d.doc_id + x * 3 + y) % d.npal) * 41) % 256 AS b,
+      |         255 AS a
       |       FROM d,
       |         LATERAL (SELECT unnest(generate_series(0, d.w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN r * 65536 + g * 256 + b END) AS BIGINT)
-      |         AS first_px,
-      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)""")
 
   /** q163 — ANIMATED GIF frame sampling over the full compositing
     * model ([[graft.sources.GifImage.decodeAnimation]] — the
@@ -2480,16 +2167,12 @@ object Multimodal {
     * disposal state machine in closed form (disjoint rects make every
     * frame's canvas analytic), so a compositing defect in any regime,
     * the transparency path, or the snapshot/dispose ordering
-    * hash-mismatches.
-    *
-    * Scale shape: ids sorted first, then synth+decode+composite once per
-    * row after the exchange ([[sortedIds]]); the (media_id, frame) explode
-    * of ≤4 stat pairs keeps the id order; media bytes never shuffle. */
+    * hash-mismatches. */
   /** q163's synth→composite→per-frame-stats kernel over an arbitrary
     * doc_id frame — shared with [[graft.tools.CodecScaleProbe]]'s
     * animation lane so the 100× probe measures the GRADED pipeline. */
-  private[graft] def gifFrameStatsOf(ids: DataFrame): DataFrame = {
-    val sample = udf { (id: Long) =>
+  private[graft] def gifFrameStatsOf(ids: DataFrame): DataFrame =
+    decodeFanOut(ids, "frame_idx", "n_painted", "sum_rgb") { id =>
       import graft.sources.GifImage
       val w = (8 + id % 5).toInt; val h = (6 + id % 4).toInt
       val nf = (2 + id % 3).toInt
@@ -2523,16 +2206,9 @@ object Multimodal {
         (fr.index, painted, sumRgb)
       }
     }
-    sortedIds(ids)
-      .select(col("media_id"), explode(sample(col("media_id"))).as("t"))
-      .select(col("media_id"), col("t._1").as("frame_idx"),
-        col("t._2").as("n_painted"), col("t._3").as("sum_rgb"))
-  }
 
-  def q163GifFrameSample(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    gifFrameStatsOf(Tables.documents(s, dir).select($"doc_id"))
-  }
+  def q163GifFrameSample(s: SparkSession, dir: String): DataFrame =
+    gifFrameStatsOf(Tables.documents(s, dir).select(col("doc_id")))
 
   val q163Oracle: String =
     """WITH d AS (SELECT doc_id, doc_id % 3 AS cls, 2 + doc_id % 3 AS nf,
@@ -2584,14 +2260,9 @@ object Multimodal {
     * the CANONICAL width/height/wsum/first_px — every one of which is
     * orientation-SENSITIVE, so a face that stopped normalizing (or
     * normalized through a wrong transform) hash-mismatches even though
-    * the rotation-invariant q157 totals would not notice.
-    *
-    * Scale shape: ids sorted first, then synth+orient+encode+dispatch once
-    * per row after the exchange ([[sortedIds]]); only the ≤72-byte stat
-    * tuple leaves the task. */
-  def q167OrientedDispatchDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synthDecode = udf { (id: Long) =>
+    * the rotation-invariant q157 totals would not notice. */
+  def q167OrientedDispatchDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir)) { id =>
       import graft.sources.{JpegImage, MediaCodec}
       val wc = (8 * (2 + id % 2)).toInt
       val hc = (8 * (1 + id % 3)).toInt
@@ -2609,34 +2280,16 @@ object Multimodal {
           s"dispatch face returned $other for an oriented JPEG")
       }
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", synthDecode($"media_id").as("st"))
-      .select($"media_id",
-        $"st._1".as("width"), $"st._2".as("height"),
-        $"st._3".as("n_pixels"), $"st._4".as("sum_rgb"),
-        $"st._5".as("wsum"), $"st._6".as("first_px"),
-        $"st._7".as("peak_lum"), $"st._8".as("sum_alpha"))
-  }
 
-  val q167Oracle: String =
-    """WITH p AS (SELECT doc_id, 8 * (2 + doc_id % 2) AS w,
+  val q167Oracle: String = faceStatsSql(
+    s"""p AS (SELECT doc_id, 8 * (2 + doc_id % 2) AS w,
       |                  8 * (1 + doc_id % 3) AS h FROM documents),
-      |px AS (SELECT doc_id, w, h, x, y,
+      |gray AS (SELECT doc_id, w, h, x, y,
       |         (doc_id * 17 + (x // 8) * 41 + (y // 8) * 23) % 256 AS c
       |       FROM p,
       |         LATERAL (SELECT unnest(generate_series(0, w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(3 * c) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * 3 * c) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN c * 65536 + c * 256 + c END) AS BIGINT) AS first_px,
-      |       CAST(max(1000 * c) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, h - 1)) AS y) ys),
+      |$grayPx""")
 
   /** q164 — TIFF container decode (round 17): per document a canonical
     * image is synthesized in one of three pixel classes (grayscale —
@@ -2651,11 +2304,7 @@ object Multimodal {
     * oracle recomputes the CANONICAL stats analytically from doc_id
     * (orientation/layout/compression-independent by design — any
     * defect in the IFD walk, either LZW width schedule, the predictor,
-    * tile edge padding or the orientation mapping hash-mismatches).
-    *
-    * Scale shape: ids sorted first, then synth+encode+dispatch once per row
-    * after the exchange ([[sortedIds]]); only the ≤72-byte stat tuple
-    * leaves the task. */
+    * tile edge padding or the orientation mapping hash-mismatches). */
   def q164TiffDecode(s: SparkSession, dir: String): DataFrame =
     tiffStatsOf(Tables.documents(s, dir))
 
@@ -2690,8 +2339,8 @@ object Multimodal {
     (m, lay, deep, cmyk, plan2, ycc, sub)
   }
 
-  private[graft] def tiffStatsOf(docs: DataFrame): DataFrame = {
-    val synthDecode = udf { (id: Long) =>
+  private[graft] def tiffStatsOf(docs: DataFrame): DataFrame =
+    decodeLane(docs) { id =>
       import graft.sources.{JpegImage, MediaCodec, TiffImage}
       val w = (3 + id % 14).toInt; val h = (2 + id % 11).toInt
       val (m, lay, deep, cmyk, plan2, ycc, sub) = q164Knobs(id)
@@ -2783,17 +2432,9 @@ object Multimodal {
       }
       faceStats(dec.width, dec.height, dec.pixels)
     }
-    sortedIds(docs)
-      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
-      .select(col("media_id"),
-        col("st._1").as("width"), col("st._2").as("height"),
-        col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
-        col("st._5").as("wsum"), col("st._6").as("first_px"),
-        col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
-  }
 
-  val q164Oracle: String =
-    """WITH d AS (SELECT doc_id, 3 + doc_id % 14 AS w, 2 + doc_id % 11 AS h,
+  val q164Oracle: String = faceStatsSql(
+    """d AS (SELECT doc_id, 3 + doc_id % 14 AS w, 2 + doc_id % 11 AS h,
       |                  doc_id % 3 AS m, 2 + doc_id % 9 AS npal
       |           FROM documents),
       |px AS (SELECT d.doc_id, d.w, d.h, x, y,
@@ -2811,22 +2452,11 @@ object Multimodal {
       |         WHEN 1 THEN (d.doc_id + x + y * 7) % 256
       |         ELSE (d.doc_id
       |               + ((d.doc_id + x * 3 + y) % d.npal) * 41) % 256
-      |    END AS b
+      |    END AS b,
+      |    255 AS a
       |  FROM d,
       |    LATERAL (SELECT unnest(generate_series(0, d.w - 1)) AS x) xs,
-      |    LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(r + g + b) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * (r + g + b)) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN r * 65536 + g * 256 + b END) AS BIGINT)
-      |         AS first_px,
-      |       CAST(max(299 * r + 587 * g + 114 * b) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |    LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)""")
 
   /** q168 — TIFF quarantine triage (the q144/q149/q152/q154 family
     * member for the new container): six per-document classes — a good
@@ -2835,95 +2465,75 @@ object Multimodal {
     * the strict parser. sum_pixels aggregates only the decoded class,
     * so a reject that silently decodes (or a decode that silently
     * rejects) shifts two rows at once. */
-  def q168TiffQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val triage = udf { (id: Long) =>
-      import graft.sources.TiffImage
-      val w = (3 + id % 5).toInt; val h = (2 + id % 4).toInt
-      val gray = Array.tabulate(w * h)(i =>
-        ((id * 7 + (i % w) * 13 + (i / w) * 31) % 256).toInt)
-      val good = TiffImage.encode(w, h, gray, photometric = 1,
-        lzw = id % 2 == 0, rowsPerStrip = 2)
-      def patchInline(bytes: Array[Byte], tag: Int, v: Int): Array[Byte] = {
-        val b = bytes.clone()
-        val ifd = (b(4) & 0xff) | ((b(5) & 0xff) << 8) |
-          ((b(6) & 0xff) << 16) | ((b(7) & 0xff) << 24)
-        val n = (b(ifd) & 0xff) | ((b(ifd + 1) & 0xff) << 8)
-        var i = 0
-        while (i < n) {
-          val e = ifd + 2 + 12 * i
-          val t = (b(e) & 0xff) | ((b(e + 1) & 0xff) << 8)
-          if (t == tag) {
-            b(e + 8) = (v & 0xff).toByte
-            b(e + 9) = ((v >> 8) & 0xff).toByte
-          }
-          i += 1
-        }
-        b
-      }
-      val bytes = (id % 6) match {
-        case 0 => good
-        case 1 => val b = good.clone(); b(2) = 43; b // wrong magic
-        case 2 => java.util.Arrays.copyOf(good, good.length / 2)
-        case 3 => patchInline(good, 259, 6) // old-style JPEG (spec-
-          // deprecated, permanently out of scope). Retargeted TWICE in
-          // round 18: CCITT G3/G4 became decodable (q172) so the class
-          // moved onto NEW-style JPEG (7), then q175 made THAT
-          // decodable and the class moved onto the deprecated old
-          // style in the same commit — the q144 retarget invariant,
-          // 9th application.
-        case 4 => patchInline(good, 258, 12) // 12-bit samples
-          // (retargeted round 17 — 16-bit became decodable; 12-bit
-          // packed samples remain out of scope)
-        case _ => // non-ascending IFD: swap the first two entries
-          val b = good.clone()
-          val ifd = (b(4) & 0xff) | ((b(5) & 0xff) << 8) |
-            ((b(6) & 0xff) << 16) | ((b(7) & 0xff) << 24)
-          var k = 0
-          while (k < 12) {
-            val t = b(ifd + 2 + k)
-            b(ifd + 2 + k) = b(ifd + 2 + 12 + k)
-            b(ifd + 2 + 12 + k) = t
-            k += 1
-          }
-          b
-      }
-      try {
-        val t = TiffImage.parse(bytes)
-        ("decoded", t.pixels.length.toLong)
-      } catch {
-        case e: IllegalArgumentException =>
-          val m = e.getMessage
-          val reason =
-            if (m.contains("magic")) "bad_magic"
-            else if (m.contains("overruns") || m.contains("out of range"))
-              "truncated"
-            else if (m.contains("compression")) "unsupported_compression"
-            else if (m.contains("BitsPerSample")) "deep_samples"
-            else if (m.contains("ascending")) "non_ascending_ifd"
-            else "other"
-          (reason, 0L)
-      }
-    }
-    Tables.documents(s, dir)
-      .select(triage($"doc_id").as("t"))
-      .groupBy($"t._1".as("reason"))
-      .agg(count(lit(1)).as("n_files"), sum($"t._2").as("sum_pixels"))
-      .orderBy($"reason")
+  def q168TiffQuarantine(s: SparkSession, dir: String): DataFrame =
+    quarantineReport(Tables.documents(s, dir), q168Classes, "sum_pixels")(
+      b => (Seq(graft.sources.TiffImage.parse(b).pixels.length.toLong), None))
+
+  /** q168's decodable little-endian gray TIFF. */
+  private def q168Tiff(id: Long): Array[Byte] = {
+    val w = (3 + id % 5).toInt; val h = (2 + id % 4).toInt
+    val gray = Array.tabulate(w * h)(i =>
+      ((id * 7 + (i % w) * 13 + (i / w) * 31) % 256).toInt)
+    graft.sources.TiffImage.encode(w, h, gray, photometric = 1,
+      lzw = id % 2 == 0, rowsPerStrip = 2)
   }
 
-  val q168Oracle: String =
-    """WITH d AS (SELECT doc_id, doc_id % 6 AS cls, 3 + doc_id % 5 AS w,
-      |                  2 + doc_id % 4 AS h FROM documents)
-      |SELECT CASE cls WHEN 0 THEN 'decoded' WHEN 1 THEN 'bad_magic'
-      |            WHEN 2 THEN 'truncated'
-      |            WHEN 3 THEN 'unsupported_compression'
-      |            WHEN 4 THEN 'deep_samples'
-      |            ELSE 'non_ascending_ifd' END AS reason,
-      |       CAST(count(*) AS BIGINT) AS n_files,
-      |       CAST(sum(CASE WHEN cls = 0 THEN w * h ELSE 0 END) AS BIGINT)
-      |         AS sum_pixels
-      |FROM d GROUP BY 1 ORDER BY reason""".stripMargin
+  /** The first-IFD offset of a little-endian TIFF. */
+  private def ifdAt(b: Array[Byte]): Int = (b(4) & 0xff) |
+    ((b(5) & 0xff) << 8) | ((b(6) & 0xff) << 16) | ((b(7) & 0xff) << 24)
+
+  /** q168's TIFF with the inline value of IFD entry `tag` set to `v`. */
+  private def q168Patched(id: Long, tag: Int, v: Int): Array[Byte] = {
+    val b = q168Tiff(id)
+    val ifd = ifdAt(b)
+    val n = (b(ifd) & 0xff) | ((b(ifd + 1) & 0xff) << 8)
+    var i = 0
+    while (i < n) {
+      val e = ifd + 2 + 12 * i
+      val t = (b(e) & 0xff) | ((b(e + 1) & 0xff) << 8)
+      if (t == tag) {
+        b(e + 8) = (v & 0xff).toByte
+        b(e + 9) = ((v >> 8) & 0xff).toByte
+      }
+      i += 1
+    }
+    b
+  }
+
+  private val q168Classes = Seq(
+    QClass("decoded", Seq("(3 + doc_id % 5) * (2 + doc_id % 4)"))(q168Tiff),
+    QClass("bad_magic", Nil, "magic") { id =>
+      val b = q168Tiff(id); b(2) = 43; b // wrong magic
+    },
+    QClass("truncated", Nil, "overruns", "out of range") { id =>
+      val good = q168Tiff(id)
+      java.util.Arrays.copyOf(good, good.length / 2)
+    },
+    // old-style JPEG (spec-deprecated, permanently out of scope).
+    // Retargeted TWICE in round 18: CCITT G3/G4 became decodable (q172)
+    // so the class moved onto NEW-style JPEG (7), then q175 made THAT
+    // decodable and the class moved onto the deprecated old style in
+    // the same commit — the q144 retarget invariant, 9th application.
+    QClass("unsupported_compression", Nil, "compression")(
+      q168Patched(_, 259, 6)),
+    // 12-bit samples (retargeted round 17 — 16-bit became decodable;
+    // 12-bit packed samples remain out of scope)
+    QClass("deep_samples", Nil, "BitsPerSample")(q168Patched(_, 258, 12)),
+    QClass("non_ascending_ifd", Nil, "ascending") { id =>
+      // swap the first two IFD entries
+      val b = q168Tiff(id)
+      val ifd = ifdAt(b)
+      var k = 0
+      while (k < 12) {
+        val t = b(ifd + 2 + k)
+        b(ifd + 2 + k) = b(ifd + 2 + 12 + k)
+        b(ifd + 2 + 12 + k) = t
+        k += 1
+      }
+      b
+    })
+
+  val q168Oracle: String = quarantineSql(q168Classes, "sum_pixels")
 
   /** The q166 fixture + hash core: every 4 consecutive ids share one
     * canonical ANIMATION; each id stores a RE-ENCODE that must
@@ -2938,7 +2548,7 @@ object Multimodal {
     import graft.sources.GifImage
     val canon = id / 4
     val v = (id % 4).toInt
-    // splitmix64 finalizer, NOT the q136 multiplicative mix: that
+    // [[splitmix64]], NOT the q136 multiplicative mix: that
     // trick decorrelates BASES but over consecutive pixel indices its
     // high bits walk a near-linear sequence mod 256, and `% nPal` of a
     // linear walk is periodic — at the 100× probe scale 5% of sampled
@@ -2946,12 +2556,6 @@ object Multimodal {
     // 300k cross-canon "identical" animations. The oracle never
     // replays content (it states pair structure only), so the fixture
     // is free to use a full-avalanche hash.
-    def mix(m: Long): Long = {
-      var z = m * 0x9E3779B97F4A7C15L
-      z ^= (z >>> 29); z *= 0xBF58476D1CE4E5B9L
-      z ^= (z >>> 32)
-      z & 0xff
-    }
     val w = (8 + canon % 9).toInt; val h = (8 + canon % 7).toInt
     val nf = (2 + canon % 3).toInt
     val nPal = (4 + canon % 5).toInt
@@ -2959,10 +2563,11 @@ object Multimodal {
     // pixels never use: odd variants declare it transparent, so the
     // GCE path is exercised without changing a single composited pixel
     val pal = Array.tabulate(nPal + 1)(j => 0xff000000 |
-      (mix(canon * 31 + j).toInt << 16) |
-      (mix(canon * 17 + j * 7).toInt << 8) | mix(canon * 7 + j * 13).toInt)
-    def framePx(f: Int): Array[Int] =
-      Array.tabulate(w * h)(i => (mix(canon * 1009 + f * 97 + i) % nPal).toInt)
+      ((splitmix64(canon * 31 + j) & 0xff).toInt << 16) |
+      ((splitmix64(canon * 17 + j * 7) & 0xff).toInt << 8) |
+      (splitmix64(canon * 7 + j * 13) & 0xff).toInt)
+    def framePx(f: Int): Array[Int] = Array.tabulate(w * h)(i =>
+      ((splitmix64(canon * 1009 + f * 97 + i) & 0xff) % nPal).toInt)
     val geom = (0 until nf).map(f => (0, 0, w, h, (v * 3 + f) % 10))
     val bytes = GifImage.encodeAnimation(w, h, pal, geom, framePx,
       interlacedFrame = f => (v + f) % 2 == 1,
@@ -3120,14 +2725,10 @@ object Multimodal {
     * state leaking between pages) changes a row an oracle pins.
     * Single-page [[TiffImage.parse]] REJECTS multi-page files by name
     * (silent first-page decode of a 50-page document is silent data
-    * loss) — spec-asserted.
-    *
-    * Scale shape: ids sorted first, then synth+encode+chain-walk once per
-    * row after the exchange ([[sortedIds]]); the (doc, page) explode keeps
-    * the id order, pages ascending. */
-  def q170TiffMultiPage(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val synth = udf { (id: Long) =>
+    * loss) — spec-asserted. */
+  def q170TiffMultiPage(s: SparkSession, dir: String): DataFrame =
+    decodeFanOut(Tables.documents(s, dir), "page", "width", "height",
+        "n_pixels", "sum_rgb", "wsum", "first_px", "peak_lum") { id =>
       import graft.sources.TiffImage
       val np = (2 + id % 3).toInt
       val pages = (0 until np).map { p =>
@@ -3143,42 +2744,25 @@ object Multimodal {
       val decoded = TiffImage.parsePages(
         TiffImage.encodePages(pages, bigEndian = id % 2 == 0))
       decoded.zipWithIndex.map { case (t, p) =>
-        val st = faceStats(t.width, t.height, t.pixels.map(0xff000000 | _))
-        (p, st._1, st._2, st._3, st._4, st._5, st._6, st._7)
+        val f = faceStats(t.width, t.height, t.pixels.map(0xff000000 | _))
+        (p, f.width, f.height, f.n_pixels, f.sum_rgb, f.wsum, f.first_px,
+          f.peak_lum)
       }
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", explode(synth($"media_id")).as("t"))
-      .select($"media_id", $"t._1".as("page"),
-        $"t._2".as("width"), $"t._3".as("height"),
-        $"t._4".as("n_pixels"), $"t._5".as("sum_rgb"),
-        $"t._6".as("wsum"), $"t._7".as("first_px"),
-        $"t._8".as("peak_lum"))
-  }
 
-  val q170Oracle: String =
-    """WITH d AS (SELECT doc_id, 2 + doc_id % 3 AS np FROM documents),
+  val q170Oracle: String = faceStatsSql(
+    s"""d AS (SELECT doc_id, 2 + doc_id % 3 AS np FROM documents),
       |pg AS (SELECT d.doc_id, p,
       |         3 + (d.doc_id + p) % 6 AS w,
       |         2 + (d.doc_id + 2 * p) % 5 AS h
       |       FROM d, LATERAL (SELECT unnest(generate_series(0, d.np - 1))
       |                        AS p) g),
-      |px AS (SELECT pg.doc_id, pg.p, pg.w, pg.h, x, y,
+      |gray AS (SELECT pg.doc_id, CAST(pg.p AS INT) AS page, pg.w, pg.h, x, y,
       |         (pg.doc_id * 11 + pg.p * 67 + x * 5 + y * 13) % 256 AS c
       |       FROM pg,
       |         LATERAL (SELECT unnest(generate_series(0, pg.w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, pg.h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id, CAST(p AS INT) AS page,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(3 * c) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * 3 * c) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN c * 65536 + c * 256 + c END) AS BIGINT)
-      |         AS first_px,
-      |       CAST(max(1000 * c) AS BIGINT) AS peak_lum
-      |FROM px GROUP BY doc_id, p ORDER BY media_id, page""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, pg.h - 1)) AS y) ys),
+      |$grayPx""", page = true, alpha = false)
 
   /** The q171 fixture + hash core: every 4 consecutive ids share one
     * canonical multi-page DOCUMENT (2–4 grayscale pages of full-
@@ -3209,21 +2793,15 @@ object Multimodal {
     import graft.sources.{JpegImage, TiffImage}
     val canon = id / 4
     val v = (id % 4).toInt
-    // splitmix64 finalizer — the q166 lesson: per-INDEX randomness must
+    // [[splitmix64]] — the q166 lesson: per-INDEX randomness must
     // fully avalanche or probe-scale canons collide into structured
     // patterns (the fixture-separation spec samples the 100× id range)
-    def mix(m: Long): Long = {
-      var z = m * 0x9E3779B97F4A7C15L
-      z ^= (z >>> 29); z *= 0xBF58476D1CE4E5B9L
-      z ^= (z >>> 32)
-      z & 0xff
-    }
     val np = (2 + canon % 3).toInt
     val pages = (0 until np).map { p =>
-      val w = (8 + mix(canon * 131 + p * 17) % 9).toInt
-      val h = (8 + mix(canon * 173 + p * 29) % 7).toInt
+      val w = (8 + (splitmix64(canon * 131 + p * 17) & 0xff) % 9).toInt
+      val h = (8 + (splitmix64(canon * 173 + p * 29) & 0xff) % 7).toInt
       val px = Array.tabulate(w * h) { i =>
-        val c = mix(canon * 1009 + p * 97 + i).toInt
+        val c = (splitmix64(canon * 1009 + p * 97 + i) & 0xff).toInt
         (c << 16) | (c << 8) | c
       }
       (w, h, px)
@@ -3294,11 +2872,7 @@ object Multimodal {
     * EOL/RTC framing, bit packing, or the photometric/orientation
     * mapping hash-mismatches. The ITU tables themselves are
     * additionally pinned by JDK ImageIO parity in both directions
-    * (TiffImageSpec).
-    *
-    * Scale shape: ids sorted first, then synth+encode+dispatch once per row
-    * after the exchange ([[sortedIds]]); only the ≤72-byte stat tuple
-    * leaves the task. */
+    * (TiffImageSpec). */
   def q172CcittDecode(s: SparkSession, dir: String): DataFrame =
     ccittStatsOf(Tables.documents(s, dir))
 
@@ -3306,8 +2880,8 @@ object Multimodal {
     * ((doc_id) → stats), shared with the scale probe so the probe
     * measures the pipeline the oracle grades (the tiffStatsOf
     * pattern). */
-  private[graft] def ccittStatsOf(docs: DataFrame): DataFrame = {
-    val synthDecode = udf { (id: Long) =>
+  private[graft] def ccittStatsOf(docs: DataFrame): DataFrame =
+    decodeLane(docs) { id =>
       import graft.sources.{JpegImage, MediaCodec, TiffImage}
       val w = (8 + id % 17).toInt; val h = (6 + id % 11).toInt
       val canonFace = Array.tabulate(w * h) { i =>
@@ -3335,36 +2909,17 @@ object Multimodal {
       }
       faceStats(dec.width, dec.height, dec.pixels)
     }
-    sortedIds(docs)
-      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
-      .select(col("media_id"),
-        col("st._1").as("width"), col("st._2").as("height"),
-        col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
-        col("st._5").as("wsum"), col("st._6").as("first_px"),
-        col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
-  }
 
-  val q172Oracle: String =
-    """WITH d AS (SELECT doc_id, 8 + doc_id % 17 AS w, 6 + doc_id % 11 AS h
+  val q172Oracle: String = faceStatsSql(
+    s"""d AS (SELECT doc_id, 8 + doc_id % 17 AS w, 6 + doc_id % 11 AS h
       |           FROM documents),
-      |px AS (SELECT d.doc_id, d.w, d.h, x, y,
+      |gray AS (SELECT d.doc_id, d.w, d.h, x, y,
       |         CASE WHEN (d.doc_id * 7 + x * 3 + y * 5) % 11 < 5
       |              THEN 0 ELSE 255 END AS c
       |       FROM d,
       |         LATERAL (SELECT unnest(generate_series(0, d.w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(3 * c) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * 3 * c) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN c * 65536 + c * 256 + c END) AS BIGINT)
-      |         AS first_px,
-      |       CAST(max(1000 * c) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys),
+      |$grayPx""")
 
 
   /** q173 — IMA ADPCM WAV decode (round 18): the last common
@@ -3381,13 +2936,10 @@ object Multimodal {
     * DuckDB-replayable from doc_id alone. Block boundaries are real:
     * each block carries a DIFFERENT constant, so a header-offset or
     * predictor-reset defect shifts sum_v/sum_abs.
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]); one stat tuple per doc leaves the
-    * task. */
-  def q173AdpcmDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val decode = udf { (id: Long) =>
+ */
+  def q173AdpcmDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir), "n_frames", "sum_abs", "sum_v",
+        "peak_abs") { id =>
       import graft.sources.WavAudio
       val spb = (9 + 8 * (id % 4)).toInt
       val nBlocks = (1 + id % 3).toInt
@@ -3408,11 +2960,6 @@ object Multimodal {
       }
       (w.nFrames.toLong, sumAbs, sumV, peak)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", decode($"media_id").as("t"))
-      .select($"media_id", $"t._1".as("n_frames"), $"t._2".as("sum_abs"),
-        $"t._3".as("sum_v"), $"t._4".as("peak_abs"))
-  }
 
   val q173Oracle: String =
     """WITH d AS (SELECT doc_id, 9 + 8 * (doc_id % 4) AS spb,
@@ -3440,13 +2987,10 @@ object Multimodal {
     * shifts the sums. General content is graded by WavAudioSpec's
     * fixture ladder + fuzz (no javax.sound codec exists — the q173
     * posture).
-    *
-    * Scale shape: ids sorted first, then synth+encode+decode once per row
-    * after the exchange ([[sortedIds]]); one stat tuple per doc leaves the
-    * task. */
-  def q174MsAdpcmDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val decode = udf { (id: Long) =>
+ */
+  def q174MsAdpcmDecode(s: SparkSession, dir: String): DataFrame =
+    decodeLane(Tables.documents(s, dir), "n_frames", "sum_abs", "sum_v",
+        "peak_abs") { id =>
       import graft.sources.WavAudio
       val spb = (8 + 2 * (id % 4)).toInt
       val nBlocks = (1 + id % 3).toInt
@@ -3467,11 +3011,6 @@ object Multimodal {
       }
       (w.nFrames.toLong, sumAbs, sumV, peak)
     }
-    sortedIds(Tables.documents(s, dir))
-      .select($"media_id", decode($"media_id").as("t"))
-      .select($"media_id", $"t._1".as("n_frames"), $"t._2".as("sum_abs"),
-        $"t._3".as("sum_v"), $"t._4".as("peak_abs"))
-  }
 
   val q174Oracle: String =
     """WITH d AS (SELECT doc_id, 8 + 2 * (doc_id % 4) AS spb,
@@ -3502,19 +3041,15 @@ object Multimodal {
     * strip JPEG framing, the tables path, channel validation or the
     * orientation mapping hash-mismatches. Abbreviated JPEGTables
     * streams and JDK parity both directions are spec-pinned
-    * (TiffImageSpec).
-    *
-    * Scale shape: ids sorted first, then synth+encode+dispatch once per row
-    * after the exchange ([[sortedIds]]); only the ≤72-byte stat tuple
-    * leaves the task. */
+    * (TiffImageSpec). */
   def q175JpegTiffDecode(s: SparkSession, dir: String): DataFrame =
     jpegTiffStatsOf(Tables.documents(s, dir))
 
   /** The q175 synth→encode→dispatch→faceStats kernel as a frame core
     * ((doc_id) → stats), shared with the scale probe (the
     * tiffStatsOf/ccittStatsOf pattern). */
-  private[graft] def jpegTiffStatsOf(docs: DataFrame): DataFrame = {
-    val synthDecode = udf { (id: Long) =>
+  private[graft] def jpegTiffStatsOf(docs: DataFrame): DataFrame =
+    decodeLane(docs) { id =>
       import graft.sources.{JpegImage, MediaCodec, TiffImage}
       val w = (8 * (1 + id % 3)).toInt; val h = (8 * (1 + id % 2)).toInt
       val canonFace = Array.tabulate(w * h) { i =>
@@ -3545,35 +3080,16 @@ object Multimodal {
       }
       faceStats(dec.width, dec.height, dec.pixels)
     }
-    sortedIds(docs)
-      .select(col("media_id"), synthDecode(col("media_id")).as("st"))
-      .select(col("media_id"),
-        col("st._1").as("width"), col("st._2").as("height"),
-        col("st._3").as("n_pixels"), col("st._4").as("sum_rgb"),
-        col("st._5").as("wsum"), col("st._6").as("first_px"),
-        col("st._7").as("peak_lum"), col("st._8").as("sum_alpha"))
-  }
 
-  val q175Oracle: String =
-    """WITH d AS (SELECT doc_id, 8 * (1 + doc_id % 3) AS w,
+  val q175Oracle: String = faceStatsSql(
+    s"""d AS (SELECT doc_id, 8 * (1 + doc_id % 3) AS w,
       |                  8 * (1 + doc_id % 2) AS h FROM documents),
-      |px AS (SELECT d.doc_id, d.w, d.h, x, y,
+      |gray AS (SELECT d.doc_id, d.w, d.h, x, y,
       |         (d.doc_id * 37 + (x // 8) * 41 + (y // 8) * 113) % 256 AS c
       |       FROM d,
       |         LATERAL (SELECT unnest(generate_series(0, d.w - 1)) AS x) xs,
-      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys)
-      |SELECT doc_id AS media_id,
-      |       CAST(min(w) AS BIGINT) AS width,
-      |       CAST(min(h) AS BIGINT) AS height,
-      |       CAST(count(*) AS BIGINT) AS n_pixels,
-      |       CAST(sum(3 * c) AS BIGINT) AS sum_rgb,
-      |       CAST(sum((y + 1) * 3 * c) AS BIGINT) AS wsum,
-      |       CAST(min(CASE WHEN x = 0 AND y = 0
-      |                THEN c * 65536 + c * 256 + c END) AS BIGINT)
-      |         AS first_px,
-      |       CAST(max(1000 * c) AS BIGINT) AS peak_lum,
-      |       CAST(count(*) * 255 AS BIGINT) AS sum_alpha
-      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+      |         LATERAL (SELECT unnest(generate_series(0, d.h - 1)) AS y) ys),
+      |$grayPx""")
 
   /** Encoding knobs for variant `v`, page `p` of a q176 fixture PDF
     * (canonBit = canon parity): (filter arm per
@@ -3620,20 +3136,15 @@ object Multimodal {
     import graft.sources.PdfImages
     val canon = id / 4
     val v = (id % 4).toInt
-    def mix(m: Long): Long = {
-      var z = m * 0x9E3779B97F4A7C15L
-      z ^= (z >>> 29); z *= 0xBF58476D1CE4E5B9L
-      z ^= (z >>> 32)
-      z
-    }
     val np = (2 + canon % 3).toInt
     val pages = (0 until np).map { p =>
-      val w = 64 + 8 * (math.floorMod(mix(canon * 419 + p * 23), 3)).toInt
-      val h = 64 + 8 * (math.floorMod(mix(canon * 541 + p * 31), 2)).toInt
+      val w = 64 + 8 * math.floorMod(splitmix64(canon * 419 + p * 23), 3).toInt
+      val h = 64 + 8 * math.floorMod(splitmix64(canon * 541 + p * 31), 2).toInt
       val cols = w / 8
       val px = Array.tabulate(w * h) { i =>
         val cell = (i % w) / 8 + ((i / w) / 8) * cols
-        val c = if ((mix(canon * 7919 + p * 101 + cell) & 1) == 0) 0 else 255
+        val c =
+          if ((splitmix64(canon * 7919 + p * 101 + cell) & 1) == 0) 0 else 255
         (c << 16) | (c << 8) | c
       }
       val (arm, asArr, b1, rot) = q176PageKnobs(v, p, canon % 2 == 0)
@@ -3719,17 +3230,11 @@ object Multimodal {
     import graft.sources.WavAudio
     val canon = id / 4
     val v = (id % 4).toInt
-    def mix(m: Long): Long = {
-      var z = m * 0x9E3779B97F4A7C15L
-      z ^= (z >>> 29); z *= 0xBF58476D1CE4E5B9L
-      z ^= (z >>> 32)
-      z
-    }
     val nf = (2 + canon % 3).toInt
     val Run = 18; val Runs = 64
     val win = Run * Runs
     val samples = Array.tabulate(nf * win) { i =>
-      val b = (mix(canon * 6007 + (i / Run) * 131) & 15).toInt
+      val b = (splitmix64(canon * 6007 + (i / Run) * 131) & 15).toInt
       val mag = (b & 7) * 16 + 8 // 8, 24, ..., 120
       if ((b & 8) != 0) -mag else mag
     }
@@ -3759,7 +3264,7 @@ object Multimodal {
       var z = 0x243F6A8885A308DL
       var j = 0
       while (j < win) {
-        z = mix(z * 31 + w.samples(f * win + j))
+        z = splitmix64(z * 31 + w.samples(f * win + j))
         j += 1
       }
       z
@@ -3813,117 +3318,97 @@ object Multimodal {
     * analytic oracle states per-class file counts and decoded-pixel
     * sums; a misclassified reason, a leaked exception, or an isolation
     * failure (the broken page hiding the good one) hash-mismatches. */
-  def q178PdfQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val triage = udf { (id: Long) =>
-      import graft.sources.PdfImages
-      import graft.sources.PdfImages.PageEnc
-      import java.nio.charset.StandardCharsets.ISO_8859_1
-      val w = (8 + id % 5).toInt; val h = (6 + id % 4).toInt
-      val cls = (id % 7).toInt
-      def mix(m: Long): Long = {
-        var z = m * 0x9E3779B97F4A7C15L
-        z ^= (z >>> 29); z *= 0xBF58476D1CE4E5B9L
-        z ^= (z >>> 32)
-        z
-      }
-      val goodPx = Array.tabulate(w * h) { i =>
-        val c = (mix(id * 31 + i) & 0xff).toInt; (c << 16) | (c << 8) | c
-      }
-      def bilevel(w2: Int, h2: Int) = Array.tabulate(w2 * h2) { i =>
-        val c = if ((mix(id * 97 + i) & 1) == 0) 0 else 255
-        (c << 16) | (c << 8) | c
-      }
-      val good = PageEnc(w, h, goodPx, 1) // Flate gray, always decodable
-      val pdf: Array[Byte] = cls match {
-        case 0 => // clean: two decodable pages
-          PdfImages.encodePdf(Seq(good, PageEnc(w, h, goodPx, 3)))
-        case 1 => // second page JBIG2 with its page-info segment
-          // re-typed to 4 (INTERMEDIATE text region — out of scope;
-          // round 20 lifted symbol/text/refinement/halftone segments
-          // INTO scope, so the quarantine class retargets onto the
-          // intermediate-region tier, which needs retained auxiliary
-          // buffers no PDF stream uses)
-          val b = PdfImages.encodePdf(Seq(good,
-            PageEnc(w, h, bilevel(w, h), 12)))
-          // the embedded stream opens with segment 0 / type 48 /
-          // page 1 / length 19 — an 11-byte signature
-          val sig = Array[Byte](0, 0, 0, 0, 48, 0, 1, 0, 0, 0, 19)
-          val at = b.indexOfSlice(sig)
-          require(at > 0, "fixture: JBIG2 page-info signature not found")
-          b(at + 4) = 4
-          b
-        case 2 => // unsupported filter on the second page (round 20:
-          // LZW decodes now, so the class retargets onto JPEG2000)
-          val s0 = new String(PdfImages.encodePdf(Seq(good,
-            PageEnc(w, h, goodPx, 1))), ISO_8859_1)
-          val at = s0.lastIndexOf("/Filter /FlateDecode")
-          (s0.substring(0, at) + "/Filter /JPXDecode " +
-            s0.substring(at + "/Filter /FlateDecode".length))
-            .getBytes(ISO_8859_1)
-        case 3 => // geometry lie: widen the second page's /Width
-          val w2 = w + 2
-          val s0 = new String(PdfImages.encodePdf(Seq(good,
-            PageEnc(w2, h, Array.fill(w2 * h)(0x808080), 1))),
-            ISO_8859_1)
-          s0.replace(s"/Width $w2", s"/Width ${w2 + 1}")
-            .getBytes(ISO_8859_1)
-        case 4 => // zeroed Flate payload on the second page
-          val brokenPx = bilevel(w, h)
-          val b = PdfImages.encodePdf(Seq(good, PageEnc(w, h, brokenPx, 1)))
-          val payload = PdfImages.pagePayloadForFixture(
-            PageEnc(w, h, brokenPx, 1))
-          val at = b.indexOfSlice(payload)
-          require(at > 0, "fixture: broken payload not found")
-          java.util.Arrays.fill(b, at, at + payload.length, 0.toByte)
-          b
-        case 5 => // unknown colorspace on the second (RGB) page
-          val s0 = new String(PdfImages.encodePdf(Seq(good,
-            PageEnc(w, h, goodPx, 7))), ISO_8859_1)
-          s0.replace("/DeviceRGB", "/DeviceNNN").getBytes(ISO_8859_1)
-        case _ => // unsupported INLINE filter (round 20): the second
-          // page's BI/ID/EI frame claims inline DCT — a named reject
-          // through the inline walk, and the XObject page must survive
-          val s0 = new String(PdfImages.encodePdf(Seq(good,
-            PageEnc(w, h, goodPx, 18))), ISO_8859_1)
-          s0.replace("/F /Fl ID", "/F /DCT ID").getBytes(ISO_8859_1)
-      }
-      val (imgs, rejects) = PdfImages.extractWithRejects(pdf)
-      val reason =
-        if (rejects.isEmpty) "decoded"
-        else {
-          val m = rejects.head
-          if (m.contains("segment type")) "foreign_segment"
-          else if (m.contains("inline image filter")) "inline_filter"
-          else if (m.contains("unsupported image filter"))
-            "unsupported_filter"
-          else if (m.contains("raster payload")) "geometry_mismatch"
-          else if (m.contains("Flate")) "bad_flate"
-          else if (m.contains("colorspace")) "bad_colorspace"
-          else "other"
-        }
-      (reason, imgs.map(_.pixels.length.toLong).sum)
+  def q178PdfQuarantine(s: SparkSession, dir: String): DataFrame =
+    quarantineReport(Tables.documents(s, dir), q178Classes, "sum_pixels") {
+      pdf =>
+        val (imgs, rejects) = graft.sources.PdfImages.extractWithRejects(pdf)
+        (Seq(imgs.map(_.pixels.length.toLong).sum), rejects.headOption)
     }
-    Tables.documents(s, dir)
-      .select(triage($"doc_id").as("t"))
-      .groupBy($"t._1".as("reason"))
-      .agg(count(lit(1)).as("n_files"), sum($"t._2").as("sum_pixels"))
-      .orderBy($"reason")
+
+  /** A q178 PDF: the document's always-decodable Flate gray page, then
+    * the page `second` builds from the same (w, h, gray pixels). */
+  private def q178Pdf(id: Long)(
+      second: (Int, Int, Array[Int]) => PdfImages.PageEnc): Array[Byte] = {
+    val w = (8 + id % 5).toInt; val h = (6 + id % 4).toInt
+    val px = Array.tabulate(w * h) { i =>
+      val c = (splitmix64(id * 31 + i) & 0xff).toInt; (c << 16) | (c << 8) | c
+    }
+    PdfImages.encodePdf(Seq(PdfImages.PageEnc(w, h, px, 1), second(w, h, px)))
   }
 
-  val q178Oracle: String =
-    """WITH d AS (SELECT doc_id, doc_id % 7 AS cls, 8 + doc_id % 5 AS w,
-      |                  6 + doc_id % 4 AS h FROM documents)
-      |SELECT CASE cls WHEN 0 THEN 'decoded' WHEN 1 THEN 'foreign_segment'
-      |            WHEN 2 THEN 'unsupported_filter'
-      |            WHEN 3 THEN 'geometry_mismatch'
-      |            WHEN 4 THEN 'bad_flate'
-      |            WHEN 5 THEN 'bad_colorspace'
-      |            ELSE 'inline_filter' END AS reason,
-      |       CAST(count(*) AS BIGINT) AS n_files,
-      |       CAST(sum((CASE WHEN cls = 0 THEN 2 ELSE 1 END) * w * h)
-      |         AS BIGINT) AS sum_pixels
-      |FROM d GROUP BY 1 ORDER BY reason""".stripMargin
+  private def q178Bilevel(id: Long, w: Int, h: Int): Array[Int] =
+    Array.tabulate(w * h) { i =>
+      val c = if ((splitmix64(id * 97 + i) & 1) == 0) 0 else 255
+      (c << 16) | (c << 8) | c
+    }
+
+  /** `pdf` with its text edited by `f` (PDF syntax is Latin-1). */
+  private def pdfEdit(pdf: Array[Byte])(f: String => String): Array[Byte] = {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    f(new String(pdf, ISO_8859_1)).getBytes(ISO_8859_1)
+  }
+
+  private val q178Classes = {
+    import graft.sources.PdfImages.PageEnc
+    val page = "(8 + doc_id % 5) * (6 + doc_id % 4)"
+    Seq(
+      QClass("decoded", Seq(s"2 * $page"))( // clean: two decodable pages
+        q178Pdf(_)((w, h, px) => PageEnc(w, h, px, 3))),
+      // second page JBIG2 with its page-info segment re-typed to 4
+      // (INTERMEDIATE text region — out of scope; round 20 lifted
+      // symbol/text/refinement/halftone segments INTO scope, so the
+      // quarantine class retargets onto the intermediate-region tier,
+      // which needs retained auxiliary buffers no PDF stream uses)
+      QClass("foreign_segment", Seq(page), "segment type") { id =>
+        val b = q178Pdf(id)((w, h, _) =>
+          PageEnc(w, h, q178Bilevel(id, w, h), 12))
+        // the embedded stream opens with segment 0 / type 48 / page 1 /
+        // length 19 — an 11-byte signature
+        val at =
+          b.indexOfSlice(Array[Byte](0, 0, 0, 0, 48, 0, 1, 0, 0, 0, 19))
+        require(at > 0, "fixture: JBIG2 page-info signature not found")
+        b(at + 4) = 4
+        b
+      },
+      // unsupported filter on the second page (round 20: LZW decodes
+      // now, so the class retargets onto JPEG2000)
+      QClass("unsupported_filter", Seq(page), "unsupported image filter")(
+        id => pdfEdit(q178Pdf(id)((w, h, px) => PageEnc(w, h, px, 1))) { s0 =>
+          val at = s0.lastIndexOf("/Filter /FlateDecode")
+          s0.substring(0, at) + "/Filter /JPXDecode " +
+            s0.substring(at + "/Filter /FlateDecode".length)
+        }),
+      // geometry lie: widen the second page's /Width
+      QClass("geometry_mismatch", Seq(page), "raster payload") { id =>
+        val w2 = (8 + id % 5).toInt + 2
+        pdfEdit(q178Pdf(id)((_, h, _) =>
+          PageEnc(w2, h, Array.fill(w2 * h)(0x808080), 1)))(
+          _.replace(s"/Width $w2", s"/Width ${w2 + 1}"))
+      },
+      // zeroed Flate payload on the second page
+      QClass("bad_flate", Seq(page), "Flate") { id =>
+        val (w, h) = ((8 + id % 5).toInt, (6 + id % 4).toInt)
+        val broken = PageEnc(w, h, q178Bilevel(id, w, h), 1)
+        val b = q178Pdf(id)((_, _, _) => broken)
+        val payload = PdfImages.pagePayloadForFixture(broken)
+        val at = b.indexOfSlice(payload)
+        require(at > 0, "fixture: broken payload not found")
+        java.util.Arrays.fill(b, at, at + payload.length, 0.toByte)
+        b
+      },
+      // unknown colorspace on the second (RGB) page
+      QClass("bad_colorspace", Seq(page), "colorspace")(id =>
+        pdfEdit(q178Pdf(id)((w, h, px) => PageEnc(w, h, px, 7)))(
+          _.replace("/DeviceRGB", "/DeviceNNN"))),
+      // unsupported INLINE filter (round 20): the second page's BI/ID/EI
+      // frame claims inline DCT — a named reject through the inline
+      // walk, and the XObject page must survive
+      QClass("inline_filter", Seq(page), "inline image filter")(id =>
+        pdfEdit(q178Pdf(id)((w, h, px) => PageEnc(w, h, px, 18)))(
+          _.replace("/F /Fl ID", "/F /DCT ID"))))
+  }
+
+  val q178Oracle: String = quarantineSql(q178Classes, "sum_pixels")
 
   /** q179 fixture: doc_id = canon·4 + v — the SAME canonical multi-page
     * document re-published in TWO CONTAINERS: v ∈ {0, 2} as multi-page
@@ -3937,20 +3422,15 @@ object Multimodal {
     import graft.sources.{JpegImage, PdfImages, TiffImage}
     val canon = id / 4
     val v = (id % 4).toInt
-    def mix(m: Long): Long = {
-      var z = m * 0x9E3779B97F4A7C15L
-      z ^= (z >>> 29); z *= 0xBF58476D1CE4E5B9L
-      z ^= (z >>> 32)
-      z
-    }
     val np = (2 + canon % 3).toInt
     val pages = (0 until np).map { p =>
-      val w = 64 + 8 * math.floorMod(mix(canon * 863 + p * 41), 3).toInt
-      val h = 64 + 8 * math.floorMod(mix(canon * 907 + p * 53), 2).toInt
+      val w = 64 + 8 * math.floorMod(splitmix64(canon * 863 + p * 41), 3).toInt
+      val h = 64 + 8 * math.floorMod(splitmix64(canon * 907 + p * 53), 2).toInt
       val cols = w / 8
       val px = Array.tabulate(w * h) { i =>
         val cell = (i % w) / 8 + ((i / w) / 8) * cols
-        val c = if ((mix(canon * 6971 + p * 127 + cell) & 1) == 0) 0 else 255
+        val c =
+          if ((splitmix64(canon * 6971 + p * 127 + cell) & 1) == 0) 0 else 255
         (c << 16) | (c << 8) | c
       }
       (w, h, px)

@@ -6,6 +6,24 @@ import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+object MultimodalSpec {
+  /** The queries that decode one media row per document in media_id
+    * order: q37's stub pipeline and the lanes built by
+    * `Multimodal.decodeLane` / `decodeFanOut`. */
+  val decodeLanes: Seq[String] = Seq("q37_multimodal_pipeline",
+    "q129_audio_decode", "q135_image_decode", "q139_png_decode",
+    "q142_png_gray_decode", "q143_png_palette_decode",
+    "q145_png_interlaced_decode", "q146_png_16bit_decode",
+    "q147_gif_decode", "q150_gif_animation_report", "q151_jpeg_decode",
+    "q155_jpeg_progressive_decode", "q156_wav_wide_decode",
+    "q158_png_sub8_decode", "q160_jpeg_exif_normalize",
+    "q162_bmp_palette_decode", "q163_gif_frame_sample",
+    "q164_tiff_decode", "q167_oriented_dispatch_decode",
+    "q169_g711_decode", "q170_tiff_multipage", "q172_ccitt_decode",
+    "q173_adpcm_decode", "q174_ms_adpcm_decode",
+    "q175_jpeg_tiff_decode")
+}
+
 /** Multimodal plumbing specs + the stream-stream interval join. */
 class MultimodalSpec extends SparkSuite {
 
@@ -22,19 +40,7 @@ class MultimodalSpec extends SparkSuite {
       "q37_multimodal_pipeline" -> "frame_no",
       "q163_gif_frame_sample" -> "frame_idx",
       "q170_tiff_multipage" -> "page")
-    val lanes = Seq("q37_multimodal_pipeline", "q129_audio_decode",
-      "q135_image_decode", "q139_png_decode", "q142_png_gray_decode",
-      "q143_png_palette_decode", "q145_png_interlaced_decode",
-      "q146_png_16bit_decode", "q147_gif_decode",
-      "q150_gif_animation_report", "q151_jpeg_decode",
-      "q155_jpeg_progressive_decode", "q156_wav_wide_decode",
-      "q158_png_sub8_decode", "q160_jpeg_exif_normalize",
-      "q162_bmp_palette_decode", "q163_gif_frame_sample",
-      "q164_tiff_decode", "q167_oriented_dispatch_decode",
-      "q169_g711_decode", "q170_tiff_multipage", "q172_ccitt_decode",
-      "q173_adpcm_decode", "q174_ms_adpcm_decode",
-      "q175_jpeg_tiff_decode")
-    val unordered = lanes.filter { name =>
+    val unordered = MultimodalSpec.decodeLanes.filter { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       val key = "media_id" +: frameKey.get(name).toSeq
       val idx = key.map(df.schema.fieldIndex)
@@ -46,21 +52,6 @@ class MultimodalSpec extends SparkSuite {
       }
     }
     assert(unordered.isEmpty, unordered.mkString(", "))
-  }
-
-  test("batched mapPartitions decode equals per-row UDF decode") {
-    import spark.implicits._
-    val media = Multimodal.mediaFromDocuments(spark, sfDir)
-    val a = Multimodal.withFeatures(media)
-      .select($"media_id", $"features")
-      .orderBy($"media_id").collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val b = Multimodal.withFeaturesBatched(media, batchSize = 7)
-      .select($"media_id", $"features")
-      .orderBy($"media_id").collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    assert(a.nonEmpty)
-    assert(a == b)
   }
 
   test("resizeMeta preserves aspect and caps the long side") {

@@ -380,6 +380,27 @@ class PlanQualitySpec extends SparkSuite {
       s"${offenders.size} queries: ${offenders.mkString(", ")}")
   }
 
+  /** ScalaUDF occurrences in a plan's expressions (AQE's initial plan
+    * included), counting each copy an optimizer rule inlined. */
+  private def scalaUdfs(p: SparkPlan): Int = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => scalaUdfs(a.initialPlan)
+      case _ => 0
+    }
+    p.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum +
+      inner + p.children.map(scalaUdfs).sum + p.subqueries.map(scalaUdfs).sum
+  }
+
+  test("every decode lane holds exactly one ScalaUDF " +
+    "(a collapsed stats projection would decode once per column)") {
+    val counts = MultimodalSpec.decodeLanes.map { name =>
+      name -> scalaUdfs(SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.executedPlan)
+    }
+    val wrong = counts.filter(_._2 != 1)
+    assert(wrong.isEmpty, wrong.mkString(", "))
+  }
+
   test("runtime-capped NLJ queries reject an over-cap broadcast batch") {
     // the runtime lane's contract is the require inside
     // Similarity.boundedBroadcast — prove it actually fires: a frame
