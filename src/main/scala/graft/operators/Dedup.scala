@@ -1240,13 +1240,12 @@ object Dedup {
     * one: the synthetic docs share one bag-of-words mode, so one band
     * value holds 65% of the corpus): each (band, value) bucket is
     * grouped into one `collect_list` of its (doc_id, simhash) structs,
-    * and buckets with `size(ds) > [[SimhashBucketCap]]` are dropped
-    * before the pair expansion, making the cap part of the operator's
-    * semantics, mirrored in the oracle. Memory caveat: the cap filters
-    * AFTER the collect, so a hot bucket's whole member list is still
-    * built in one task's memory — 65% of the corpus on this fixture,
-    * unbounded at scale; the cap bounds the pair fan-out, not the
-    * grouped row. Production uses a 64-bit
+    * and buckets holding more than [[SimhashBucketCap]] docs are dropped
+    * before that collect (a per-bucket count and a broadcast anti-join),
+    * making the cap part of the operator's semantics, mirrored in the
+    * oracle. No task builds a hot bucket's member list — 65% of the
+    * corpus on this fixture; the cap bounds both the grouped row and the
+    * pair fan-out. Production uses a 64-bit
     * simhash with 16-bit bands (65 536 values/band) where buckets stay
     * sparse on a deduplicated web corpus; the cap is the guard for the
     * adversarial/degenerate tail either way. */
@@ -1285,23 +1284,30 @@ object Dedup {
     * broadcast anti-join both sides consumed) re-derived the signature
     * pipeline four times in the plan and cost ~18 AQE stages of driver
     * planning; candidates now come from the pair-expansion kernel —
-    * group the band rows by bucket, drop over-cap buckets with the SAME
-    * size test the hot list applied, and expand i<j (doc, sh) struct
-    * pairs IN-TASK ([[expandPairs]]; sort_array on the struct orders by
+    * group the band rows of the under-cap buckets, and expand i<j
+    * (doc, sh) struct pairs IN-TASK ([[expandPairs]]; sort_array on the struct orders by
     * the unique doc_id, so i<j ⟺ doc_a < doc_b). Same candidate set,
     * same distinct, same histogram — oracle hash unchanged. */
   private[graft] def simhashHammingReport(sims: DataFrame): DataFrame = {
     val s = sims.sparkSession
     import s.implicits._
     val par = s.sparkContext.defaultParallelism
-    val buckets = sims
+    val bands = sims
       .select($"doc_id", $"sh", explode(expr("sequence(0, 3)")).as("b"))
       .withColumn("bv",
         expr("(sh div CAST(pow(256, b) AS BIGINT)) % 256"))
+    // over-cap buckets drop BEFORE the collect, as in
+    // [[cappedBandCandidates]]: a map-side-combined count per bucket and
+    // a broadcast anti-join against the (rare, tiny) hot set, so no task
+    // ever builds a hot bucket's member list
+    val hot = bands.groupBy($"b", $"bv").count()
+      .filter($"count" > SimhashBucketCap)
+      .select($"b", $"bv")
+    val buckets = bands.join(broadcast(hot), Seq("b", "bv"), "left_anti")
       .repartition(par, $"b", $"bv")
       .groupBy($"b", $"bv")
       .agg(sort_array(collect_list(struct($"doc_id", $"sh"))).as("ds"))
-      .filter(size($"ds") > 1 && size($"ds") <= SimhashBucketCap)
+      .filter(size($"ds") > 1)
     val cand = expandPairs(buckets, "ds", "pa", "pb")
       .select($"pa.doc_id".as("doc_a"), $"pb.doc_id".as("doc_b"),
         $"pa.sh".as("sha"), $"pb.sh".as("shb"))

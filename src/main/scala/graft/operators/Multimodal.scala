@@ -81,7 +81,7 @@ object Multimodal {
     * the class index, so the generated [[quarantineSql]] oracle grades
     * the parser rather than itself. Output: (reason, n_files,
     * quantities…) in reason order. Task-local synth+mutate+parse per row;
-    * only the short verdict moves to a ≤k-group aggregate. */
+    * only the 8-byte ids and the short verdict move. */
   private def quarantineReport(docs: DataFrame, classes: Seq[QClass],
       quantities: String*)(
       decode: Array[Byte] => (Seq[Long], Option[String])): DataFrame = {
@@ -96,7 +96,15 @@ object Multimodal {
       (rejected.fold("decoded")(m =>
         classes.find(_.says.exists(m.contains)).fold("other")(_.reason)), q)
     }
-    docs.select(triage(col("doc_id")).as("t"))
+    // ids spread over every core before the triage UDF, at an explicit
+    // width (the frameSetHashFrame reasoning): the one-partition scan of
+    // a small documents file would otherwise run every synth+mutate+
+    // parse serially in one task. The report sums longs, so partitioning
+    // cannot change a cell.
+    docs.select(col("doc_id"))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
+        col("doc_id"))
+      .select(triage(col("doc_id")).as("t"))
       .groupBy(col("t._1").as("reason"))
       .agg(count(lit(1)).as("n_files"), quantities.zipWithIndex.map {
         case (n, i) => sum(element_at(col("t._2"), i + 1)).as(n)
@@ -2079,8 +2087,8 @@ object Multimodal {
   }
 
   /** The oriented-corpus hash core in the [[imageHashesOf]] frame shape
-    * ((doc_id) → (doc_id, lo, hi)) — what [[graft.streaming
-    * .PhashIndexStream]] plugs in so a ROTATED RE-UPLOAD cannot escape
+    * ((doc_id) → (doc_id, lo, hi)) — the core of [[graft.streaming
+    * .OrientedPhashIndexStream]], so a ROTATED RE-UPLOAD cannot escape
     * the incremental image index (advisor r16 medium): stream hashing
     * composes the same one-copy kernel (dispatch face + upright aHash)
     * as batch q161, so stream ≡ batch oriented grouping by
@@ -2598,25 +2606,17 @@ object Multimodal {
     * from the bucketed band join with the stop-bucket cap; the Jaccard
     * join is candidate-pair × frame sized. */
   def q166AnimationNearDup(s: SparkSession, dir: String): DataFrame =
-    animNearDupOf(Tables.documents(s, dir))
+    frameSetNearDupOf(Tables.documents(s, dir), q166AnimHashes)
 
-  /** The q166 hash core as a frame: (doc_id) → DISTINCT (doc_id,
-    * fhash) rows (frame-SET semantics) — shared by the batch query,
-    * the scale probe, and the incremental index
-    * ([[graft.streaming.AnimIndexStream]]) so stream hashing ≡ batch
-    * hashing by construction. */
-  private[graft] def animHashFrame(docs: DataFrame): DataFrame =
-    frameSetHashFrame(docs, udf { (id: Long) => q166AnimHashes(id) })
-
-  /** q171's hash core in the same frame shape — the scanned-document
-    * twin, shared by batch q171, the scale probe, and
-    * [[graft.streaming.DocIndexStream]]. */
-  private[graft] def docHashFrame(docs: DataFrame): DataFrame =
-    frameSetHashFrame(docs, udf { (id: Long) => q171DocHashes(id) })
-
-  private def frameSetHashFrame(docs: DataFrame,
-      hashesOf: org.apache.spark.sql.expressions.UserDefinedFunction):
-      DataFrame =
+  /** A frame-set lane's hash core as a frame: (doc_id) → DISTINCT
+    * (doc_id, fhash) rows (frame-SET semantics) through the lane's
+    * per-document hash function (`q166AnimHashes`, `q171DocHashes`,
+    * `q176PdfHashes`, `q177AudioHashes`, `q179Hashes`) — shared by the
+    * batch query, the scale probe, and the lane's incremental index
+    * ([[graft.streaming.AnimIndexStream]] and its siblings) so stream
+    * hashing ≡ batch hashing by construction. */
+  private[graft] def frameSetHashFrame(docs: DataFrame,
+      hashesOf: Long => Array[Long]): DataFrame =
     docs
       .select(col("doc_id"))
       // decode cost is per-ROW (ms of codec work), not per-byte — a
@@ -2634,7 +2634,8 @@ object Multimodal {
       // width at any corpus size.
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col("doc_id"))
-      .select(col("doc_id"), explode(hashesOf(col("doc_id"))).as("fhash"))
+      .select(col("doc_id"), explode(udf(hashesOf).apply(col("doc_id")))
+        .as("fhash"))
       .distinct()
 
   /** Bucket rows over a frame-hash frame — the FULL 64-bit hash is the
@@ -2652,7 +2653,7 @@ object Multimodal {
 
   /** ONE copy of the frame-set Jaccard scorer ((doc_a, doc_b)
     * candidate keys × the frame-hash table → n_common + sim), shared
-    * by batch q166 and the incremental merge. */
+    * by the batch lanes and their incremental indexes. */
   private[graft] def animScore(candKeys: DataFrame,
       allFh: DataFrame): DataFrame = {
     val nPer = allFh.groupBy(col("doc_id")).agg(count(lit(1)).as("nh"))
@@ -2674,25 +2675,20 @@ object Multimodal {
   }
 
   /** q166's presentation face over a scored pair frame — ONE copy
-    * shared with AnimIndexStream.report. */
+    * shared with the frame-set indexes' `report`. */
   private[graft] def animPresentation(scored: DataFrame): DataFrame =
     scored.filter(col("sim") >= 0.8)
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("sim"),
         (expr("doc_a div 4") === expr("doc_b div 4")).as("same_canon"))
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** The full q166 pipeline as a frame core ((doc_id) → surviving
-    * pairs), shared with the scale probe. */
-  private[graft] def animNearDupOf(docs: DataFrame): DataFrame =
-    frameSetNearDupOf(animHashFrame(docs))
-
-  /** The full q171 pipeline as a frame core — the scanned-document
-    * twin, shared with its scale-probe lane. */
-  private[graft] def docNearDupOf(docs: DataFrame): DataFrame =
-    frameSetNearDupOf(docHashFrame(docs))
-
-  private def frameSetNearDupOf(fh0: DataFrame): DataFrame = {
-    val fh = fh0.cache() // banding, both Jaccard sides, per-doc counts
+  /** A frame-set lane's full batch pipeline as a frame core ((doc_id)
+    * → surviving pairs in q166's presentation), shared by q166, q171,
+    * q176, q177, q179 and the scale probe. */
+  private[graft] def frameSetNearDupOf(docs: DataFrame,
+      hashesOf: Long => Array[Long]): DataFrame = {
+    // banding, both Jaccard sides, per-doc counts
+    val fh = frameSetHashFrame(docs, hashesOf).cache()
     // materialize the (candidate-pair-sized) result eagerly so the
     // frame-hash cache can be RELEASED before returning — repeated
     // invocations (scale-probe lanes, long sessions) must not
@@ -2847,7 +2843,7 @@ object Multimodal {
     * join is candidate-pair × page sized. Incremental twin:
     * [[graft.streaming.DocIndexStream]]. */
   def q171ScannedDocNearDup(s: SparkSession, dir: String): DataFrame =
-    docNearDupOf(Tables.documents(s, dir))
+    frameSetNearDupOf(Tables.documents(s, dir), q171DocHashes)
 
   val q171Oracle: String =
     """WITH d AS (SELECT doc_id, doc_id // 4 AS canon FROM documents)
@@ -3160,18 +3156,6 @@ object Multimodal {
       .toArray
   }
 
-  /** q176's hash core in the frame-set shape — shared by batch q176,
-    * the scale probe and [[graft.streaming.PdfIndexStream]] (the
-    * kernel's third instantiation), so stream ≡ batch by
-    * construction. */
-  private[graft] def pdfHashFrame(docs: DataFrame): DataFrame =
-    frameSetHashFrame(docs, udf { (id: Long) => q176PdfHashes(id) })
-
-  /** The full q176 pipeline as a frame core — shared with its
-    * scale-probe lane. */
-  private[graft] def pdfNearDupOf(docs: DataFrame): DataFrame =
-    frameSetNearDupOf(pdfHashFrame(docs))
-
   /** q176 — SCANNED-PDF embedded-image near-dup (round 19): the
     * reference's OWN corpus shape end-to-end — its 51 label PDFs are
     * re-scanned pages whose content travels as image XObjects
@@ -3199,7 +3183,7 @@ object Multimodal {
     * join is candidate-pair × page sized. Incremental twin:
     * [[graft.streaming.PdfIndexStream]]. */
   def q176ScannedPdfNearDup(s: SparkSession, dir: String): DataFrame =
-    pdfNearDupOf(Tables.documents(s, dir))
+    frameSetNearDupOf(Tables.documents(s, dir), q176PdfHashes)
 
   /** Encoding knobs for variant `v` of canon `c` in the q177 fixture:
     * (codec family 0=PCM16 1=mu-law 2=A-law 3=IMA-ADPCM 4=MS-ADPCM,
@@ -3271,17 +3255,6 @@ object Multimodal {
     }
   }
 
-  /** q177's hash core in the frame-set shape — shared by batch q177,
-    * the scale probe and [[graft.streaming.PcmIndexStream]] (the
-    * kernel's fourth instantiation). */
-  private[graft] def audioHashFrame(docs: DataFrame): DataFrame =
-    frameSetHashFrame(docs, udf { (id: Long) => q177AudioHashes(id) })
-
-  /** The full q177 pipeline as a frame core — shared with its
-    * scale-probe lane. */
-  private[graft] def audioNearDupOf(docs: DataFrame): DataFrame =
-    frameSetNearDupOf(audioHashFrame(docs))
-
   /** q177 — AUDIO near-dup (round 19): the last modality without a
     * dedup lane. A re-encoded recording (same signal published as
     * PCM16, G.711 mu/A-law, IMA or MS ADPCM at different sample-rate
@@ -3300,7 +3273,7 @@ object Multimodal {
     * the bucketed band join; Jaccard candidate-pair × window sized.
     * Incremental twin: [[graft.streaming.PcmIndexStream]]. */
   def q177AudioNearDup(s: SparkSession, dir: String): DataFrame =
-    audioNearDupOf(Tables.documents(s, dir))
+    frameSetNearDupOf(Tables.documents(s, dir), q177AudioHashes)
 
   /** q178 — PDF QUARANTINE (round 19): q176's quarantine twin, the
     * house pattern every media lane carries (q144 PNG / q149 GIF /
@@ -3463,26 +3436,6 @@ object Multimodal {
     face.map { case (w, h, px) => uprightAhash64(w, h, px) }.toArray
   }
 
-  /** q179's hash core in the frame-set shape — the kernel's FIFTH
-    * instantiation. */
-  private[graft] def crossHashFrame(docs: DataFrame): DataFrame =
-    frameSetHashFrame(docs, udf { (id: Long) => q179Hashes(id) })
-
-  /** The full q179 pipeline as a frame core, shared with its scale
-    * probe. */
-  private[graft] def crossNearDupOf(docs: DataFrame): DataFrame = {
-    val fh = crossHashFrame(docs).cache()
-    try graft.tools.Checkpoints.tracked(
-      animScore(Dedup.cappedBandCandidates(animBands(fh)), fh)
-        .filter(col("sim") >= 0.8)
-        .select(col("doc_a"), col("doc_b"), col("n_common"), col("sim"),
-          (expr("doc_a div 4") === expr("doc_b div 4")).as("same_canon"),
-          ((col("doc_a") % 2) =!= (col("doc_b") % 2))
-            .as("cross_container"))
-        .orderBy(col("doc_a"), col("doc_b")))._1
-    finally fh.unpersist(blocking = false)
-  }
-
   /** q179 — CROSS-CONTAINER near-dup (round 20): the four frame-set
     * lanes share ONE hash convention (per-page upright aHash) but
     * never joined ACROSS containers — yet a real 100 TB corpus mixes
@@ -3501,7 +3454,8 @@ object Multimodal {
     * cross-container union costs NOTHING extra because the lanes
     * already shared the hash space; only the fixture proves it. */
   def q179CrossContainerNearDup(s: SparkSession, dir: String): DataFrame =
-    crossNearDupOf(Tables.documents(s, dir))
+    frameSetNearDupOf(Tables.documents(s, dir), q179Hashes)
+      .withColumn("cross_container", (col("doc_a") % 2) =!= (col("doc_b") % 2))
 
   val q179Oracle: String =
     """WITH d AS (SELECT doc_id, doc_id // 4 AS canon FROM documents)

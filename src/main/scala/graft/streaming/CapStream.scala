@@ -4,7 +4,7 @@ import graft.operators.Embedding
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained per-source admission cap — q121's streaming
   * twin, and a THIRD state-algebra class in the streaming family:
@@ -142,17 +142,6 @@ object CapStream {
   /** Maintain the cap over a document stream; stable checkpoint under
     * stateDir so repeated invocations resume, not replay. */
   def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+      StreamingQuery =
+    FileStream.maintain(spark, FileStream.Documents, inDir, stateDir)(mergeBatch)
 }

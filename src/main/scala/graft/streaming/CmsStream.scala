@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Temporal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained count-min sketch — the streaming member of
   * the mergeable-sketch family (q68 is its batch twin): per micro-batch
@@ -48,17 +48,6 @@ object CmsStream {
   /** Maintain the sketch over a document stream; stable checkpoint under
     * stateDir so repeated invocations resume, not replay. */
   def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+      StreamingQuery =
+    FileStream.maintain(spark, FileStream.Documents, inDir, stateDir)(mergeBatch)
 }

@@ -1,156 +1,37 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import java.nio.file.{Files, Paths}
-
-/** Incrementally-maintained near-duplicate index — the dedup twin of
-  * [[SearchIndexStream]]'s TARGET_LAG semantics: as new documents arrive,
-  * their MinHash signatures are computed from THEIR shingles only (Δ
-  * work), candidate pairs come from probing the accumulated LSH band
-  * index on (band, bkey), and the discovered pairs accumulate. The
-  * corpus is never re-shingled and never re-paired: per micro-batch the
-  * work is O(batch shingles + matching band buckets), the property that
-  * makes continuous dedup of a growing 100 TB corpus feasible where a
-  * batch re-run (q28) is O(corpus) every time.
-  *
-  * Exactly-once discipline is inherited from the SearchIndexStream
-  * pattern: stable checkpoint (resume, never replay), per-batch marker
-  * (retry of an applied batch is a no-op), and ALL THREE state tables
-  * (sigs, bands, pairs) written under ONE versioned directory behind a
-  * single atomically-replaced CURRENT pointer — a crash at any instant
-  * leaves the composite state fully old or fully new, so readState can
-  * never observe new pairs against old signatures (the D6 transaction
-  * analog, same as the search index).
-  *
-  * Hot-bucket note: the per-batch probe is LINEAR in batch size (each
-  * batch band row equi-joins its bucket), so unlike batch q28 no
-  * quadratic expansion happens per trigger — but a degenerate bucket
-  * still accrues |bucket| pairs per arriving member over time. Batch
-  * q28 drops buckets larger than [[graft.operators.Dedup.MaxShingleDf]]
-  * outright; the incremental twin intentionally does NOT (a bucket
-  * crossing the cap mid-stream would require retracting already-emitted
-  * pairs). Deployments expecting boilerplate-heavy corpora should
-  * periodically rebuild from batch q28, which the versioned-state
-  * single-pointer commit makes a drop-in swap.
-  *
-  * Last-writer-wins applies to ALL state, pairs included: when a doc_id
-  * re-arrives (possibly with changed text), its signature and band rows
-  * are replaced AND every accumulated pair touching it is retracted and
-  * recomputed from the new signature via the band probe. A doc whose new
-  * text no longer collides with its old partners therefore stops being
-  * marked their near-dup — stale pairs cannot linger to mislead a
-  * downstream keep-one-per-cluster retention pass.
+/** Incrementally-maintained text near-duplicate index — q28's streaming
+  * twin and the dedup twin of [[SearchIndexStream]]'s TARGET_LAG
+  * semantics: as new documents arrive, their MinHash signatures are
+  * computed from THEIR shingles only ([[Dedup.minhashWide]], one shingle
+  * pass per distinct batch doc), candidate pairs come from probing the
+  * accumulated LSH band index on (band, bkey), and pairs are scored by
+  * signature-slot match fraction — est_sim always reflects the CURRENT
+  * signatures. Per micro-batch the work is O(batch shingles + matching
+  * band buckets), the property that makes continuous dedup of a growing
+  * 100 TB corpus feasible where a batch re-run (q28) is O(corpus) every
+  * time. Lifecycle, last-writer-wins and the rebuild signal:
+  * [[BandIndex]].
   *
   * State tables (all hash-partitionable at scale):
   *  - sigs  (doc_id, mh0..mh7)     — 8 ints (16-bit minhash slots) per doc
   *  - bands (doc_id, band, bkey)   — 4 rows per doc, the inverted index
   *  - pairs (doc_a, doc_b, est_sim) — accumulated candidates
   */
-object DedupIndexStream {
-
-  // composite versioned state (single pointer over all 3 tables) — the
-  // shared machinery lives in [[VersionedState]]
-
-  private def emptySigs(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Int, Int, Int, Int, Int, Int, Int, Int)]
-      .toDF("doc_id" +: (0 to 7).map(k => s"mh$k"): _*)
-  }
-
-  /** Read current state (empty frames before the first commit). The
-    * single pointer guarantees the three frames are one consistent
-    * snapshot — never new pairs over old signatures. */
-  def readState(spark: SparkSession, stateDir: String):
-      (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    // fail LOUDLY on a state dir written by the pre-composite layout
-    // (per-table sigs.current pointer files): silently starting from
-    // empty state while the stable checkpoint suppresses replay would
-    // discard all accumulated history without an error
-    if (Files.exists(Paths.get(s"$stateDir/sigs.current")) &&
-        !Files.exists(Paths.get(s"$stateDir/CURRENT")))
-      throw new IllegalStateException(
-        s"$stateDir holds legacy per-table state; migrate or rebuild it")
-    val state = new VersionedState(stateDir)
-    (state.read(spark, "sigs").getOrElse(emptySigs(spark)),
-      state.read(spark, "bands")
-        .getOrElse(Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey")),
-      state.read(spark, "pairs")
-        .getOrElse(Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "est_sim")))
-  }
-
-  /** Merge one micro-batch of new documents: Δ signatures, Δ bands,
-    * and pairs recomputed for every batch doc (batch×state through the
-    * band index, plus batch-internal), verified by signature-slot
-    * fraction. Idempotent per batchId AND under partial-crash retries
-    * (the composite commit makes a retry recompute from either the
-    * fully-old or fully-new snapshot — both converge).
-    * @return the [[BandIndexMerge]] rebuild signal: max population among the band
-    *         buckets this batch touched, post-merge (−1 for an
-    *         already-applied batch); > [[Dedup.MaxShingleDf]] means batch q28's
-    *         stop-bucket cap would drop a bucket this index still
-    *         probes — schedule a batch rebuild. */
-  def mergeBatch(batch: DataFrame, stateDir: String, batchId: Long): Long = {
-    val state = new VersionedState(stateDir)
-    if (state.isApplied(batchId)) { state.mark(batchId); return -1L }
-    val spark = batch.sparkSession
-    // intra-batch duplicate ids collapse to one row first — otherwise
-    // minhashWide would blend two copies' shingle streams into one
-    // signature (harmless for identical text, wrong for differing text)
-    val dSigs = Dedup.minhashWide(batch.dropDuplicates("doc_id")).cache()
-    // LWW replacement, band probe, retract-and-recompute, composite
-    // commit: the shared [[BandIndexMerge]] kernel (one copy with the
-    // image index). est_sim always reflects the CURRENT signatures —
-    // never a max() against a stale higher similarity.
-    val signal =
-      try BandIndexMerge.merge(state, batchId, readState(spark, stateDir),
-        dSigs, Dedup.lshBands(dSigs), score,
-        ("sigs", "bands", "pairs"))
-      finally dSigs.unpersist(blocking = false) // released on commit failure too
-    state.mark(batchId)
-    signal
-  }
-
-  /** ONE copy of the pair scorer (signature-slot match fraction),
-    * shared by the incremental merge and [[rebuild]]. */
-  private def score(candKeys: DataFrame, allSigs: DataFrame): DataFrame =
-    candKeys
-      .join(allSigs.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(allSigs.as("b"), col("doc_b") === col("b.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        round(Dedup.signatureMatchFraction, 6).as("est_sim"))
-
-  /** Batch rebuild — the operation the rebuild signal asks for:
-    * recompute sigs/bands/pairs single-shot from `docs` (one shingle
-    * pass per distinct doc) and swap them in under the same pointer the
-    * incremental merges use. `batchId` must be outside the stream's id
-    * space (negative) so its marker can never alias a micro-batch. */
-  def rebuild(docs: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val state = new VersionedState(stateDir)
-    val sigs = Dedup.minhashWide(docs.dropDuplicates("doc_id")).cache()
-    try BandIndexMerge.rebuild(state, batchId, sigs,
-      Dedup.lshBands(sigs), score, ("sigs", "bands", "pairs"))
-    finally sigs.unpersist(blocking = false)
-  }
-
-  /** Maintain the index over a document stream; stable checkpoint under
-    * stateDir so repeated invocations resume, not replay. */
-  def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
-}
+object DedupIndexStream extends BandIndex(
+  Dedup.minhashWide,
+  Dedup.lshBands(_),
+  (candKeys, allSigs) => candKeys
+    .join(allSigs.as("a"), col("doc_a") === col("a.doc_id"))
+    .join(allSigs.as("b"), col("doc_b") === col("b.doc_id"))
+    .select(col("doc_a"), col("doc_b"),
+      round(Dedup.signatureMatchFraction, 6).as("est_sim")),
+  _.orderBy(col("doc_a"), col("doc_b")),
+  Seq(
+    "sigs" -> ("doc_id LONG NOT NULL, " +
+      (0 to 7).map(k => s"mh$k INT NOT NULL").mkString(", ")),
+    "bands" -> "doc_id LONG NOT NULL, band INT NOT NULL, bkey STRING",
+    "pairs" -> "doc_a LONG NOT NULL, doc_b LONG NOT NULL, est_sim DOUBLE NOT NULL"))

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Embedding
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained embedding-drift monitor — q105's streaming
   * twin, and the continuous form a production pipeline actually runs:
@@ -51,17 +51,6 @@ object DriftStream {
   /** Maintain the drift state over an embedding stream; stable
     * checkpoint under stateDir so repeated invocations resume. */
   def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+      StreamingQuery =
+    FileStream.maintain(spark, FileStream.Embeddings, inDir, stateDir)(mergeBatch)
 }

@@ -3,11 +3,11 @@ package graft.streaming
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained IVF ANN index — the similarity family's
   * member of the incremental-index lifecycle the dedup family already
-  * has (DedupIndexStream / PhashIndexStream over [[BandIndexMerge]]):
+  * has (the [[BandIndex]] instances DedupIndexStream, PhashIndexStream, …):
   * as new vectors arrive they are assigned to their nearest PINNED
   * centroid's cell (Δ work: one broadcast-centroid pass over the batch,
   * never a corpus re-scan), and the ANN report probes the accumulated
@@ -63,7 +63,7 @@ object IvfIndexStream {
     *    until a [[rebuild]];
     *  - `nCentroids`: pinned set size (the divergence denominator);
     *  - `maxTouchedCell`: max population among cells touched by this
-    *    batch, post-commit (delta-scoped like [[BandIndexMerge]]'s
+    *    batch, post-commit (delta-scoped like [[BandIndex]]'s
     *    signal — only touched cells can newly cross a threshold);
     *  - `nAssigned`: total assigned rows (occupancy denominator). */
   final case class Signal(missingCentroids: Long, nCentroids: Long,
@@ -225,17 +225,6 @@ object IvfIndexStream {
   /** Maintain the index over an embeddings stream; stable checkpoint
     * under stateDir so repeated invocations resume, not replay. */
   def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+      StreamingQuery =
+    FileStream.maintain(spark, FileStream.Embeddings, inDir, stateDir)(mergeBatch)
 }

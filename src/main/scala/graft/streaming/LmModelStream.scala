@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained corpus language model — the streaming twin of
   * the q72/q76 batch scorers: per micro-batch the documents' unigram and
@@ -71,19 +71,8 @@ object LmModelStream {
   /** Maintain the model over a document stream (one file per trigger;
     * stable checkpoint so repeated invocations resume, not replay). */
   def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+      StreamingQuery =
+    FileStream.maintain(spark, FileStream.Documents, inDir, stateDir)(mergeBatch)
 
   /** Score documents against the CURRENT accumulated model with q76's
     * interpolated-bigram formula — model reuse is the whole point of

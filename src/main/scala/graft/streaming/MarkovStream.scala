@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained transition model — q130's streaming twin,
   * and the family's first maintainer whose Δ-work needs CROSS-BATCH
@@ -130,18 +130,6 @@ object MarkovStream {
   }
 
   def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+      StreamingQuery =
+    FileStream.maintain(spark, FileStream.Events, inDir, stateDir)(mergeBatch)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incrementally-maintained per-source novelty ledger — q114's
   * streaming twin: as document batches arrive, each batch is shingled
@@ -111,17 +111,6 @@ object NoveltyStream {
   /** Maintain the ledger over a document stream; stable checkpoint
     * under stateDir so repeated invocations resume, not replay. */
   def maintain(spark: SparkSession, inDir: String, stateDir: String):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+      StreamingQuery =
+    FileStream.maintain(spark, FileStream.Documents, inDir, stateDir)(mergeBatch)
 }

@@ -1,106 +1,35 @@
 package graft.streaming
 
 import graft.operators.Multimodal
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Incrementally-maintained image near-dup index — q136's streaming
-  * twin, and the multimodal member of the incremental-index family
-  * ([[DedupIndexStream]] for text MinHash, this for image aHash). As
-  * new images arrive their 64-bit perceptual hashes are computed from
-  * THEIR bytes only (Δ work, one decode per image ever), candidates
-  * come from probing the accumulated 4×16-bit Hamming band index, and
-  * pairs accumulate with exact bit_count distances. The corpus is never
-  * re-decoded and never re-paired: per trigger the work is O(batch
-  * hashes + matching band buckets) — continuous dedup of a growing
-  * image corpus where batch q136 re-decodes everything.
-  *
-  * Hashing is [[Multimodal.imageHashesOf]] — the SAME frame core the
-  * batch query uses — so stream hashing ≡ batch hashing by
-  * construction, and [[report]] reproduces q136's output exactly over
-  * the union of arrived batches (PhashIndexStreamSpec pins it over
-  * sharded replays) as long as no band bucket crosses batch q136's
-  * stop-bucket cap; like DedupIndexStream, the incremental form
-  * intentionally carries no cap (a bucket crossing it mid-stream would
-  * retract already-emitted pairs) and a cap-crossing corpus calls for a
-  * periodic batch rebuild, which the single-pointer commit makes a
-  * drop-in swap. Crossing the cap is DETECTED, not discovered: every
-  * [[mergeBatch]] returns the post-merge max population among
-  * the batch-touched buckets and the shared kernel WARN-logs past the cap (advisor r14 find).
-  *
-  * Exactly-once and last-writer-wins semantics are inherited unchanged
-  * from the DedupIndexStream pattern: stable checkpoint, per-batch
-  * marker + in-state batchId backstop, all three tables behind ONE
-  * atomically-replaced pointer, and a re-arriving doc_id replaces its
-  * hash, band rows and every accumulated pair touching it.
+  * twin. As new images arrive their 64-bit perceptual hashes are
+  * computed from THEIR bytes only ([[Multimodal.imageHashesOf]], the
+  * SAME frame core the batch query uses; one decode per image ever),
+  * candidates come from probing the accumulated 4×16-bit Hamming band
+  * index, and pairs accumulate with exact bit_count distances; [[report]]
+  * is q136's own presentation face ([[Multimodal.phashPresentation]]),
+  * so it reproduces q136's output exactly over the union of arrived
+  * batches (PhashIndexStreamSpec pins it over sharded replays) as long
+  * as no band bucket crosses the batch stop-bucket cap. Lifecycle,
+  * last-writer-wins and the rebuild signal: [[BandIndex]].
   *
   * State tables (hash-partitionable at scale):
   *  - hashes (doc_id, lo, hi)       — 16 bytes per image, ever
   *  - bands  (doc_id, band, bkey)   — 4 rows per image, the inverted index
   *  - pairs  (doc_a, doc_b, hamming) — accumulated candidates
-  *
-  * The hash core is PLUGGABLE (round 17, advisor r16 medium): the
-  * default remains q136's [[Multimodal.imageHashesOf]]; passing
-  * [[Multimodal.orientedHashesOf]] routes hashing through the
-  * EXIF-normalizing dispatch face, so a ROTATED RE-UPLOAD hashes
-  * identically to its upright original and cannot escape the
-  * incremental index (PhashIndexStreamSpec pins stream ≡ batch q161
-  * oriented grouping over sharded replays).
   */
-object PhashIndexStream {
+object PhashIndexStream extends BandIndex(Multimodal.imageHashesOf(_),
+  Multimodal.phashBands, ImageHashIndex.score, Multimodal.phashPresentation,
+  ImageHashIndex.tables)
 
-  def readState(spark: SparkSession, stateDir: String):
-      (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    val state = new VersionedState(stateDir)
-    (state.read(spark, "hashes")
-      .getOrElse(Seq.empty[(Long, Long, Long)].toDF("doc_id", "lo", "hi")),
-      state.read(spark, "bands")
-        .getOrElse(Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bkey")),
-      state.read(spark, "pairs")
-        .getOrElse(Seq.empty[(Long, Long, Long)]
-          .toDF("doc_a", "doc_b", "hamming")))
-  }
+/** What the two image indexes share besides q136's kernels. */
+private object ImageHashIndex {
 
-  /** q136's presentation face over the accumulated pairs — the ONE
-    * copy shared with the batch query
-    * ([[Multimodal.phashPresentation]]), so the "reproduces q136
-    * exactly" contract cannot drift. */
-  def report(spark: SparkSession, stateDir: String): DataFrame = {
-    val (_, _, pairs) = readState(spark, stateDir)
-    Multimodal.phashPresentation(pairs)
-  }
-
-  /** @return the [[BandIndexMerge]] rebuild signal: max population among the band
-    *         buckets this batch touched, post-merge (−1 for an
-    *         already-applied batch); > [[graft.operators.Dedup.MaxShingleDf]] means
-    *         batch q136's stop-bucket cap would drop a bucket this
-    *         index still probes — schedule a batch rebuild. */
-  def mergeBatch(batch: DataFrame, stateDir: String, batchId: Long,
-      hashCore: DataFrame => DataFrame = Multimodal.imageHashesOf(_)): Long = {
-    val state = new VersionedState(stateDir)
-    if (state.isApplied(batchId)) { state.mark(batchId); return -1L }
-    val spark = batch.sparkSession
-    // Δ hashes: one decode per distinct batch image (intra-batch dup
-    // ids collapse first — the DedupIndexStream discipline)
-    val dHashes = hashCore(
-      batch.select(col("doc_id")).dropDuplicates("doc_id")).cache()
-    // LWW replacement, band probe, retract-and-recompute, composite
-    // commit: the shared [[BandIndexMerge]] kernel (one copy with the
-    // text index)
-    val signal =
-      try BandIndexMerge.merge(state, batchId, readState(spark, stateDir),
-        dHashes, Multimodal.phashBands(dHashes), score,
-        ("hashes", "bands", "pairs"))
-      finally dHashes.unpersist(blocking = false)
-    state.mark(batchId)
-    signal
-  }
-
-  /** ONE copy of the pair scorer (exact Hamming from the hash halves),
-    * shared by the incremental merge and [[rebuild]]. */
-  private def score(candKeys: DataFrame, allHashes: DataFrame): DataFrame =
+  /** The pair scorer: exact Hamming distance from the hash halves. */
+  def score(candKeys: DataFrame, allHashes: DataFrame): DataFrame =
     candKeys
       .join(allHashes.select(col("doc_id").as("doc_a"),
         col("lo").as("lo_a"), col("hi").as("hi_a")), Seq("doc_a"))
@@ -109,36 +38,19 @@ object PhashIndexStream {
       .select(col("doc_a"), col("doc_b"),
         Multimodal.hammingExpr.as("hamming"))
 
-  /** Batch rebuild — the operation the rebuild signal asks for:
-    * recompute hashes/bands/pairs single-shot from `docs` (one decode
-    * per distinct doc) and swap them in under the same pointer the
-    * incremental merges use. `batchId` must be outside the stream's id
-    * space (negative) so its marker can never alias a micro-batch. */
-  def rebuild(docs: DataFrame, stateDir: String, batchId: Long,
-      hashCore: DataFrame => DataFrame = Multimodal.imageHashesOf(_)): Unit = {
-    val state = new VersionedState(stateDir)
-    val hashes = hashCore(
-      docs.select(col("doc_id")).dropDuplicates("doc_id")).cache()
-    try BandIndexMerge.rebuild(state, batchId, hashes,
-      Multimodal.phashBands(hashes), score, ("hashes", "bands", "pairs"))
-    finally hashes.unpersist(blocking = false)
-  }
-
-  /** Maintain the index over a document stream; stable checkpoint under
-    * stateDir so repeated invocations resume, not replay. */
-  def maintain(spark: SparkSession, inDir: String, stateDir: String,
-      hashCore: DataFrame => DataFrame = Multimodal.imageHashesOf(_)):
-      StreamingQuery = {
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, stateDir, batchId, hashCore): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .start()
-  }
+  val tables = Seq(
+    "hashes" -> "doc_id LONG NOT NULL, lo LONG NOT NULL, hi LONG NOT NULL",
+    "bands" -> "doc_id LONG NOT NULL, band INT NOT NULL, bkey LONG NOT NULL",
+    "pairs" -> "doc_a LONG NOT NULL, doc_b LONG NOT NULL, hamming LONG NOT NULL")
 }
+
+/** The image index over the EXIF-normalizing hash core
+  * ([[Multimodal.orientedHashesOf]], batch q161's dispatch face +
+  * upright aHash): a ROTATED RE-UPLOAD hashes identically to its upright
+  * original and cannot escape the incremental index
+  * (PhashIndexStreamSpec pins stream ≡ batch q161 oriented grouping over
+  * sharded replays). Same tables and presentation as
+  * [[PhashIndexStream]]. */
+object OrientedPhashIndexStream extends BandIndex(
+  Multimodal.orientedHashesOf, Multimodal.phashBands, ImageHashIndex.score,
+  Multimodal.phashPresentation, ImageHashIndex.tables)

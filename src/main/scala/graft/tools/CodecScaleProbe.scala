@@ -104,41 +104,19 @@ object CodecScaleProbe {
         .agg(countDistinct($"lo", $"hi").as("nh"))
         .filter($"nh" === 1).count()
 
-    // the animation near-dup lane measures q166's full graded pipeline
-    // (decode+composite → frame aHashes → capped band join → Jaccard);
-    // figure = surviving pairs (6 per canon at every scale)
-    def animDupKernel(docs: DataFrame): Long =
-      Multimodal.animNearDupOf(docs.select($"doc_id")).count()
-
-    // the scanned-document near-dup lane measures q171's full graded
-    // pipeline (multi-page TIFF chain decode → per-page aHash → capped
-    // band join → page-set Jaccard); figure = surviving pairs (6 per
-    // canon at every scale — the exact-figure correctness canary)
-    def docDupKernel(docs: DataFrame): Long =
-      Multimodal.docNearDupOf(docs.select($"doc_id")).count()
-
-    // the scanned-PDF near-dup lane measures q176's full graded
-    // pipeline (PDF object walk → per-filter decode via the house
-    // JPEG/CCITT/Flate codecs → per-page aHash → capped band join →
-    // page-set Jaccard); figure = surviving pairs (6 per canon at
-    // every scale — the exact-figure correctness canary)
-    def pdfDupKernel(docs: DataFrame): Long =
-      Multimodal.pdfNearDupOf(docs.select($"doc_id")).count()
-
-    // the audio near-dup lane measures q177's full graded pipeline
-    // (WAV decode across five codec families -> window hashes ->
-    // capped band join -> window-set Jaccard); figure = surviving
-    // pairs (6 per canon at every scale)
-    def audioDupKernel(docs: DataFrame): Long =
-      Multimodal.audioNearDupOf(docs.select($"doc_id")).count()
-
-    // the cross-container lane measures q179's full graded pipeline
-    // (TIFF-or-PDF decode per doc -> page hashes -> ONE shared hash
-    // space -> capped band join -> page-set Jaccard); figure =
-    // surviving pairs (6 per canon — 4 of them cross-container — at
-    // every scale)
-    def crossDupKernel(docs: DataFrame): Long =
-      Multimodal.crossNearDupOf(docs.select($"doc_id")).count()
+    // the near-dup lanes measure their query's full graded frame-set
+    // pipeline (decode → per-frame/page/window hashes → capped band
+    // join → set Jaccard): q166 GIF compositing, q171 multi-page TIFF
+    // chain decode, q176 PDF object walk + per-filter decode, q177 WAV
+    // decode across five codec families, q179 TIFF-or-PDF decode into
+    // ONE shared hash space. Figure = surviving pairs, 6 per canon at
+    // every scale (the exact-figure correctness canary)
+    val nearDupLanes: Map[String, Long => Array[Long]] = Map(
+      "animdup" -> Multimodal.q166AnimHashes,
+      "docdup" -> Multimodal.q171DocHashes,
+      "pdfdup" -> Multimodal.q176PdfHashes,
+      "audiodup" -> Multimodal.q177AudioHashes,
+      "crossdup" -> Multimodal.q179Hashes)
 
     // the CCITT lane measures q172's graded kernel (bilevel synth →
     // CCITT/packed encode across the 7-compression matrix → dispatch
@@ -169,11 +147,8 @@ object CodecScaleProbe {
         case "jpeg" => jpegKernel(docs)
         case "gifanim" => gifAnimKernel(docs)
         case "oriented" => orientedKernel(docs)
-        case "animdup" => animDupKernel(docs)
-        case "docdup" => docDupKernel(docs)
-        case "pdfdup" => pdfDupKernel(docs)
-        case "audiodup" => audioDupKernel(docs)
-        case "crossdup" => crossDupKernel(docs)
+        case l if nearDupLanes.contains(l) => Multimodal.frameSetNearDupOf(
+          docs.select($"doc_id"), nearDupLanes(l)).count()
         case "ccitt" => ccittKernel(docs)
         case "jpegtiff" => jpegTiffKernel(docs)
         case "tiff" => tiffKernel(docs)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import graft.streaming.DedupIndexStream
+import graft.streaming.{DedupIndexStream, PhashIndexStream}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -95,5 +95,20 @@ class DedupIndexStreamSpec extends SparkSuite {
     // pairs not touching the re-signed doc are untouched
     assert(pairs4.filter($"doc_a" =!= newId && $"doc_b" =!= newId)
       .except(batch).isEmpty)
+  }
+
+  test("a state dir in the legacy per-table layout fails loudly") {
+    // `<first table>.current` without the composite CURRENT pointer:
+    // starting from empty state would silently drop the history the
+    // stable checkpoint will never replay
+    for ((index, table) <- Seq(DedupIndexStream -> "sigs",
+        PhashIndexStream -> "hashes")) {
+      val stateDir = Files.createTempDirectory("graft_legacy_").toString
+      Files.write(java.nio.file.Paths.get(s"$stateDir/$table.current"),
+        "0".getBytes)
+      val e = intercept[IllegalStateException](
+        index.readState(spark, stateDir))
+      assert(e.getMessage.contains("legacy per-table state"))
+    }
   }
 }

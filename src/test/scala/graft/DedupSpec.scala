@@ -148,6 +148,53 @@ class DedupSpec extends SparkSuite {
     assert(brute.nonEmpty, "vacuous corpus: no close pairs generated")
   }
 
+  /** q120's kernel as it stood before the cap moved ahead of the
+    * collect: every bucket is collected, then over-cap ones filtered. */
+  private def simhashReportCollectFirst(sims: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val buckets = sims
+      .select($"doc_id", $"sh", explode(expr("sequence(0, 3)")).as("b"))
+      .withColumn("bv", expr("(sh div CAST(pow(256, b) AS BIGINT)) % 256"))
+      .repartition(4, $"b", $"bv")
+      .groupBy($"b", $"bv")
+      .agg(sort_array(collect_list(struct($"doc_id", $"sh"))).as("ds"))
+      .filter(size($"ds") > 1 && size($"ds") <= Dedup.SimhashBucketCap)
+    Dedup.expandPairs(buckets, "ds", "pa", "pb")
+      .select($"pa.doc_id".as("doc_a"), $"pb.doc_id".as("doc_b"),
+        $"pa.sh".as("sha"), $"pb.sh".as("shb"))
+      .distinct()
+      .withColumn("hamming", expr("CAST(bit_count(sha ^ shb) AS BIGINT)"))
+      .filter($"hamming" <= 3)
+      .groupBy($"hamming")
+      .agg(count(lit(1)).as("n_pairs"),
+        sum(expr("""CAST(conv(substr(md5(concat(doc_a, ':', doc_b)), 1, 15),
+                   |  16, 10) AS BIGINT) % 1000000000""".stripMargin))
+          .as("pair_checksum"))
+      .orderBy($"hamming")
+  }
+
+  test("q120 drops an over-cap bucket before collecting it, same report") {
+    // one band-0 bucket (low byte 0) of SimhashBucketCap + 1 docs whose
+    // other bands still pair them (i and i + 256 differ in one bit; the
+    // top byte spreads them so band 3 stays under the cap), plus 100
+    // seeded random pairs 1-3 bits apart outside that bucket
+    val cap = Dedup.SimhashBucketCap
+    val hot = (1L to cap + 1L).map(i => (i, (i << 8) | ((i * 37 % 256) << 24)))
+    val rnd = new scala.util.Random(120)
+    val cold = (0 until 100).flatMap { j =>
+      val sh = (rnd.nextLong() & 0xffffff00L) | 0x55L
+      val flip = (0 until 1 + rnd.nextInt(3))
+        .map(_ => 1L << (8 + rnd.nextInt(24))).reduce(_ ^ _)
+      Seq((10000L + 2 * j, sh), (10001L + 2 * j, sh ^ flip))
+    }
+    val sims = (hot ++ cold).toDF("doc_id", "sh")
+    assert(sims.filter($"sh" % 256 === 0).count() == cap + 1)
+    val got = Dedup.simhashHammingReport(sims).collect().toSeq
+    assert(got == simhashReportCollectFirst(sims).collect().toSeq)
+    assert(got.map(_.getAs[Long]("n_pairs")).sum > cap / 2,
+      "vacuous fixture: the hot docs should still pair through band 1")
+  }
+
   test("q117 overlap cells respect set algebra and recount exactly") {
     import org.apache.spark.sql.functions._
     val rows = Dedup.q117SourceOverlap(spark, sfDir).collect()

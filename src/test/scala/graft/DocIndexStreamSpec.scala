@@ -11,7 +11,7 @@ import java.nio.file.Files
   * every surviving pair is discovered by the batch-vs-state bucket
   * probe across triggers, never within one. Also: resume no-op,
   * re-arrival convergence, multi-row LWW state bounds, rebuild
-  * equivalence — the [[graft.streaming.FrameSetIndex]] contract,
+  * equivalence — the frame-set [[graft.streaming.BandIndex]] contract,
   * asserted on its second instantiation (AnimIndexStreamSpec pins the
   * first). */
 class DocIndexStreamSpec extends SparkSuite {

@@ -11,7 +11,7 @@ import java.nio.file.Files
   * batch-vs-state bucket probe across triggers, never within one.
   * Also: resume no-op, re-arrival convergence, multi-row LWW state
   * bounds, rebuild equivalence — the
-  * [[graft.streaming.FrameSetIndex]] contract on its FOURTH
+  * frame-set [[graft.streaming.BandIndex]] contract on its FOURTH
   * instantiation (anim/doc/pdf specs pin the first three; with four
   * hash cores over one kernel, a kernel defect has nowhere to
   * hide). */

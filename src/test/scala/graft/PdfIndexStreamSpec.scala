@@ -11,7 +11,7 @@ import java.nio.file.Files
   * by the batch-vs-state bucket probe across triggers, never within
   * one. Also: resume no-op, re-arrival convergence, multi-row LWW
   * state bounds, rebuild equivalence — the
-  * [[graft.streaming.FrameSetIndex]] contract, asserted on its THIRD
+  * frame-set [[graft.streaming.BandIndex]] contract, asserted on its THIRD
   * instantiation (AnimIndexStreamSpec and DocIndexStreamSpec pin the
   * first two; a kernel defect would have to dodge all three hash
   * cores). */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Tables
-import graft.streaming.PhashIndexStream
+import graft.streaming.{OrientedPhashIndexStream, PhashIndexStream}
 
 import java.nio.file.Files
 
@@ -79,7 +79,6 @@ class PhashIndexStreamSpec extends SparkSuite {
   }
 
   test("oriented hash core: a rotated re-upload cannot escape the incremental index") {
-    import graft.operators.Multimodal
     // 10 canons × 8 orientations, sharded so every canon's re-uploads
     // are SPLIT across triggers (doc_id % 3 never keeps a canon whole)
     val docs = Tables.documents(spark, sfDir).filter($"doc_id" < 80)
@@ -88,8 +87,8 @@ class PhashIndexStreamSpec extends SparkSuite {
       docs.filter($"doc_id" % 3 === r).coalesce(1)
         .write.mode("append").parquet(inDir)
     val stateDir = Files.createTempDirectory("graft_pho_state_").toString
-    PhashIndexStream.maintain(spark, inDir, stateDir,
-      hashCore = Multimodal.orientedHashesOf).awaitTermination()
+    OrientedPhashIndexStream.maintain(spark, inDir, stateDir)
+      .awaitTermination()
 
     // q161-style oriented grouping over the STREAM's accumulated
     // hashes: all 8 EXIF re-uploads of a canon collapse to ONE hash
@@ -116,8 +115,7 @@ class PhashIndexStreamSpec extends SparkSuite {
     // stream ≡ batch: a single-shot oriented rebuild over the same
     // docs reproduces the stream's report exactly
     val rebuiltDir = Files.createTempDirectory("graft_pho_rb_").toString
-    PhashIndexStream.rebuild(docs, rebuiltDir, -1L,
-      hashCore = Multimodal.orientedHashesOf)
+    OrientedPhashIndexStream.rebuild(docs, rebuiltDir, -1L)
     assert(PhashIndexStream.report(spark, rebuiltDir).collect().toSeq
       == report)
   }
